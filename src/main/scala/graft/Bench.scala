@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. A small warmup query first absorbs session /
   * codegen / parquet-footer warmup so per-query numbers reflect the
@@ -30,15 +28,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.withScratch(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(defaultCpus = 4)
     // opt-in alternate materialization configs so the reuse story has
     // measured numbers (PERF.md), not claims: SPARK_GRAFT_MAT_MODE
     // (local|table), SPARK_GRAFT_REUSE=1 (cross-run table reuse),
@@ -161,18 +151,6 @@ object Bench {
       // inflates LATER queries' minimums (measured: corpus_clean
       // 5.6 s isolated vs 9.1 s late in a full run)
       System.gc()
-      // SPARK_GRAFT_BENCH_DEBUG=1: per-query session-state trace for
-      // hunting cross-query interference (what accumulates, when)
-      if (sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")) {
-        val infos = spark.sparkContext.getRDDStorageInfo
-        val rt = Runtime.getRuntime
-        System.err.println(
-          f"BENCHDBG $name t1=${samples(0)._2}%.2f t2=${samples(1)._2}%.2f " +
-            f"rdds=${infos.length} memMB=${infos.map(_.memSize).sum / 1048576} " +
-            f"diskMB=${infos.map(_.diskSize).sum / 1048576} " +
-            f"shared=${Engine.sharedKeys().size} " +
-            f"heapMB=${(rt.totalMemory - rt.freeMemory) / 1048576}")
-      }
       // only SUCCESSFUL runs are timing samples — a fast crash must
       // not min() a real measurement down to its throw time. A query
       // with no successful run reports its slowest attempt (it is

@@ -22,16 +22,7 @@ import org.apache.spark.sql.functions._
 object BloomAB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.withScratch(
-      org.apache.spark.sql.SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(defaultCpus = 32)
     val docs = graft.sources.Sources.table(spark, sfDir, "documents")
     val nDocs = docs.count()
     // batch fraction sweep: backfill-shaped (50%) down to the daily-

@@ -907,6 +907,24 @@ object Engine {
   def withScratch(b: SparkSession.Builder): SparkSession.Builder =
     routeScratch().map(p => b.config("spark.local.dir", p)).getOrElse(b)
 
+  /** The harness mains' session: scratch routed ([[withScratch]]),
+    * `local[SPARK_GRAFT_CPUS]` (else `defaultCpus`) with as many
+    * shuffle partitions, UTC, no UI, events.ts TIMESTAMP(NANOS) read
+    * as Long (normalized in Sources), and [[GraftExtensions]]. */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = withScratch(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def routeScratch(): Option[String] = {
     val pref = sys.env.get("SPARK_GRAFT_SCRATCH")
     if (pref.contains("disk")) None
@@ -1136,7 +1154,6 @@ object Engine {
                      smallKey: String, bits: Int = 0,
                      nHash: Int = 5, hashFamily: String = "md5"): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.Md5PrefixLong.register(big.sparkSession)
     // md5 mode hashes the key's STRING form (the DuckDB twin's
     // replayable representation); xx mode hashes the native value —
     // both sides must then carry the SAME key type

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print the formatted physical plan and wall time of
   * one registered query. Usage:
   *   sbt "runMain graft.Explain <queryName> [sfDir]"
@@ -10,15 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Engine.withScratch(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(defaultCpus = 8)
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     // match Bench semantics exactly: query CONSTRUCTION (eager
     // materializations included) and full output materialization both

@@ -9,6 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Usage:
   * {{{
+  *   val spark = SparkSession.builder()
+  *     .withExtensions(new GraftExtensions)
+  *     .getOrCreate()
   *   val mta = Graft.mta(tripUpdates, stopTimeUpdates, stops, trips,
   *     alerts, headerTx, descTx, activePeriod, informedEntity, routes)
   *   mta.factTrips.show()

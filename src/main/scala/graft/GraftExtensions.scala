@@ -1,13 +1,16 @@
 package graft
 
-import graft.functions.{AHash64, ByteWindowFold, Bzip2Read, Bzip2Write, FlacDecode, Gunzip, GzipMembers, GzipWrite, HilbertD, KmvMin, LongArrayDot, Md5PrefixLong, PngWrite, TarWrite, TopKMin, ZipWrite}
+import scala.reflect.{ClassTag, classTag}
+
+import graft.functions._
 import graft.plans.{AsOfJoinStrategy, PruneAsOfJoinColumns, PushFilterThroughAsOfJoin}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Idiomatic extension-point registration for graft's Catalyst
-  * additions. Attach at session build time:
+/** The one place graft's Catalyst additions enter a session. Attach at
+  * session build time:
   *
   * {{{
   * SparkSession.builder()
@@ -17,213 +20,88 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Injects:
   *  - `AsOfJoinStrategy` — plans the native as-of join
-  *    (plans/AsOfJoin.scala) without the per-call lazy fallback that
-  *    `AsOf.join` applies to unextended sessions;
-  *  - `PushFilterThroughAsOfJoin` — left-side predicate pushdown
-  *    through the custom operator;
-  *  - `long_dot` — the codegen'd integer-dot `Expression`, callable
-  *    from `expr(...)` / SQL without `LongArrayDot.register`;
-  *  - `md5_prefix_long` — the codegen'd digest-prefix hash (the
-  *    portable-hash idiom without per-value hex strings), same
-  *    standing registration;
-  *  - `topk_min` — the bounded-heap top-k-per-group
-  *    TypedImperativeAggregate (functions/TopKAgg.scala);
-  *  - `hilbert_d` — the codegen'd Hilbert-curve index (the
-  *    clustered-layout key; functions/HilbertD.scala);
-  *  - `ahash64` — the codegen'd average-hash over 32 feature bytes
-  *    (the dedup_phash hot path; functions/AHash64.scala);
-  *  - `byte_window_fold` — per-window byte folds (sum / squared
-  *    deviation) for the multimodal feature stubs
-  *    (functions/ByteWindowFold.scala);
-  *  - the compression/codec family as standing SQL functions:
-  *    `gunzip` / `gzip_write` / `gzip_members` (RFC 1951/1952 both
-  *    directions + the .warc.gz member walk), `bzip2_write` /
-  *    `bzip2_read` (the block-sorting class), `flac_decode`
-  *    (lossless audio), the archive writers `zip_write` / `tar_write`
-  *    and the image writer `png_write` — an extended session
-  *    ingests/writes these formats from plain SQL.
+  *    (plans/AsOfJoin.scala);
+  *  - `PushFilterThroughAsOfJoin` / `PruneAsOfJoinColumns` — left-side
+  *    predicate pushdown and column pruning through that operator;
+  *  - every graft SQL function, one row each in
+  *    [[GraftExtensions.functions]], so `expr(...)` strings and plain
+  *    SQL resolve them with no per-call registration.
+  *
+  * Operators and models assume an extended session: `Engine.localSession`
+  * builds one for the mains, and a session without the extension fails
+  * analysis on the first graft function it meets.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     ext.injectOptimizerRule(_ => PruneAsOfJoinColumns)
-    ext.injectFunction((
-      new FunctionIdentifier("long_dot"),
-      new ExpressionInfo(classOf[LongArrayDot].getName, "long_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LongArrayDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("md5_prefix_long"),
-      new ExpressionInfo(classOf[Md5PrefixLong].getName, "md5_prefix_long"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Md5PrefixLong(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_min"),
-      new ExpressionInfo(classOf[TopKMin].getName, "topk_min"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopKMin(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("kmv_min"),
-      new ExpressionInfo(classOf[KmvMin].getName, "kmv_min"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        KmvMin(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_min_distinct"),
-      new ExpressionInfo(classOf[TopKMin].getName, "topk_min_distinct"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopKMin(exprs(0), exprs(1), distinct = true)))
-    ext.injectFunction((
-      new FunctionIdentifier("ahash64"),
-      new ExpressionInfo(classOf[AHash64].getName, "ahash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AHash64(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("byte_window_fold"),
-      new ExpressionInfo(classOf[ByteWindowFold].getName,
-        "byte_window_fold"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ByteWindowFold(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("hilbert_d"),
-      new ExpressionInfo(classOf[HilbertD].getName, "hilbert_d"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HilbertD.fromExprs(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("gunzip"),
-      new ExpressionInfo(classOf[Gunzip].getName, "gunzip"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Gunzip(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("gzip_write"),
-      new ExpressionInfo(classOf[GzipWrite].getName, "gzip_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GzipWrite(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("gzip_members"),
-      new ExpressionInfo(classOf[GzipMembers].getName, "gzip_members"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GzipMembers(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bzip2_write"),
-      new ExpressionInfo(classOf[Bzip2Write].getName, "bzip2_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Bzip2Write(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bzip2_read"),
-      new ExpressionInfo(classOf[Bzip2Read].getName, "bzip2_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Bzip2Read(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("flac_decode"),
-      new ExpressionInfo(classOf[FlacDecode].getName, "flac_decode"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FlacDecode(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("zip_write"),
-      new ExpressionInfo(classOf[ZipWrite].getName, "zip_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZipWrite(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("lz4_read"),
-      new ExpressionInfo(classOf[graft.functions.Lz4Read].getName,
-        "lz4_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Lz4Read(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("lz4_write"),
-      new ExpressionInfo(classOf[graft.functions.Lz4Write].getName,
-        "lz4_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Lz4Write(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("flac_write"),
-      new ExpressionInfo(classOf[graft.functions.FlacWriteExpr].getName,
-        "flac_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.FlacWriteExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("mp3_frames"),
-      new ExpressionInfo(classOf[graft.functions.Mp3FramesExpr].getName,
-        "mp3_frames"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Mp3FramesExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("xz_read"),
-      new ExpressionInfo(classOf[graft.functions.XzRead].getName,
-        "xz_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.XzRead(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("xz_write"),
-      new ExpressionInfo(classOf[graft.functions.XzWrite].getName,
-        "xz_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.XzWrite(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("parquet_footer"),
-      new ExpressionInfo(
-        classOf[graft.functions.ParquetFooterExpr].getName,
-        "parquet_footer"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ParquetFooterExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("gtfsrt_decode"),
-      new ExpressionInfo(classOf[graft.functions.GtfsRtDecode].getName,
-        "gtfsrt_decode"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GtfsRtDecode(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("gtfsrt_write"),
-      new ExpressionInfo(classOf[graft.functions.GtfsRtWrite].getName,
-        "gtfsrt_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.GtfsRtWrite(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("avro_read"),
-      new ExpressionInfo(classOf[graft.functions.AvroRead].getName,
-        "avro_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.AvroRead(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("avro_write"),
-      new ExpressionInfo(classOf[graft.functions.AvroWriteExpr].getName,
-        "avro_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.AvroWriteExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("zstd_read"),
-      new ExpressionInfo(classOf[graft.functions.ZstdRead].getName,
-        "zstd_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ZstdRead(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("zstd_write"),
-      new ExpressionInfo(classOf[graft.functions.ZstdWrite].getName,
-        "zstd_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ZstdWrite(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("snappy_read"),
-      new ExpressionInfo(classOf[graft.functions.SnappyReadExpr].getName,
-        "snappy_read"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SnappyReadExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("snappy_write"),
-      new ExpressionInfo(classOf[graft.functions.SnappyWriteExpr].getName,
-        "snappy_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SnappyWriteExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("png_write"),
-      new ExpressionInfo(classOf[PngWrite].getName, "png_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PngWrite(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("tar_write"),
-      new ExpressionInfo(classOf[TarWrite].getName, "tar_write"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TarWrite(exprs.head)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+object GraftExtensions {
+  type Row = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
+
+  /** One row per SQL function: its name and its argument builder. The
+    * expression class recorded for `DESCRIBE FUNCTION` is the one the
+    * builder returns. */
+  private def fn[E <: Expression: ClassTag](name: String)(
+      build: Seq[Expression] => E): Row =
+    (new FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name), build)
+
+  val functions: Seq[Row] = Seq(
+    fn("adpcm_decode")(e => AdpcmDecode(e(0))),
+    fn("ahash64")(e => AHash64(e(0))),
+    fn("avi_frames")(e => AviFrames(e(0))),
+    fn("avro_read")(e => AvroRead(e(0))),
+    fn("avro_write")(e => AvroWriteExpr(e(0), e(1))),
+    fn("bmp_decode")(e => BmpDecode(e(0))),
+    fn("bpe_merge") { e =>
+      require(e.length == 3, "bpe_merge(s, bl, br) takes 3 args")
+      BpeMerge(e(0), e(1), e(2))
+    },
+    fn("byte_window_fold")(e => ByteWindowFold(e(0), e(1), e(2))),
+    fn("bzip2_read")(e => Bzip2Read(e(0))),
+    fn("bzip2_write")(e => Bzip2Write(e(0))),
+    fn("draw_mod64")(e => DrawMod64(e(0), e(1), e(2), e(3))),
+    fn("flac_decode")(e => FlacDecode(e(0))),
+    fn("flac_write")(e => FlacWriteExpr(e(0))),
+    fn("gif_decode")(e => GifDecode(e(0))),
+    fn("gif_frames")(e => GifFrames(e(0))),
+    fn("gtfsrt_decode")(e => GtfsRtDecode(e(0))),
+    fn("gtfsrt_write")(e => GtfsRtWrite(e(0))),
+    fn("gunzip")(e => Gunzip(e(0))),
+    fn("gzip_members")(e => GzipMembers(e(0))),
+    fn("gzip_write")(e => GzipWrite(e(0))),
+    fn("hilbert_d")(HilbertD.fromExprs),
+    fn("hll_reg_merge")(e => RegMerge(e(0), e(1))),
+    fn("hll_reg_update")(e => RegUpdate(e(0), e(1), e(2))),
+    fn("jpeg_decode")(e => JpegDecode(e(0))),
+    fn("jpeg_decode_rgb")(e => JpegDecodeRgb(e(0))),
+    fn("kmv_min")(e => KmvMin(e(0), e(1))),
+    fn("long_dot")(e => LongArrayDot(e(0), e(1))),
+    fn("lz4_read")(e => Lz4Read(e(0))),
+    fn("lz4_write")(e => Lz4Write(e(0))),
+    fn("md5_prefix_long")(e => Md5PrefixLong(e(0), e(1))),
+    fn("mp3_frames")(e => Mp3FramesExpr(e(0))),
+    fn("parquet_footer")(e => ParquetFooterExpr(e(0))),
+    fn("pdf_text")(e => PdfText(e(0))),
+    fn("png_decode")(e => PngDecode(e(0))),
+    fn("png_write")(e => PngWrite(e(0), e(1), e(2))),
+    fn("snappy_read")(e => SnappyReadExpr(e(0))),
+    fn("snappy_write")(e => SnappyWriteExpr(e(0))),
+    fn("tar_list")(e => TarList(e(0))),
+    fn("tar_write")(e => TarWrite(e(0))),
+    fn("topk_min")(e => TopKMin(e(0), e(1))),
+    fn("topk_min_distinct")(e => TopKMin(e(0), e(1), distinct = true)),
+    fn("utf8_stats")(e => Utf8Stats(e(0))),
+    fn("wav_decode")(e => WavDecode(e(0))),
+    fn("xz_read")(e => XzRead(e(0))),
+    fn("xz_write")(e => XzWrite(e(0))),
+    fn("zip_list")(e => ZipList(e(0))),
+    fn("zip_write")(e => ZipWrite(e(0))),
+    fn("zstd_read")(e => ZstdRead(e(0))),
+    fn("zstd_write")(e => ZstdWrite(e(0))))
 }

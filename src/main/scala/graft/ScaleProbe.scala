@@ -24,16 +24,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Engine.withScratch(
-      org.apache.spark.sql.SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.localSession(defaultCpus = 8)
 
     val docs = Sources.table(spark, sfDir, "documents")
     val emb = Vectors.quantize(Sources.table(spark, sfDir, "embeddings"))
@@ -75,7 +66,6 @@ object ScaleProbe {
         // deliberately unprobed, like knn_brute)
         import org.apache.spark.sql.functions.{array, explode, expr,
           lit, size, when}
-        graft.functions.KmvMin.register(spark)
         val li = Sources.table(spark, sfDir, "lineitem")
           .filter(col("l_orderkey") % k === 0)
         val b = li.join(Sources.table(spark, sfDir, "orders"),
@@ -120,7 +110,6 @@ object ScaleProbe {
         // exponent must sit at or below the KMV path's (same joins,
         // denser constant-size state, one merge aggregate per round)
         import org.apache.spark.sql.functions.expr
-        graft.functions.RegAgg.register(spark)
         val li = Sources.table(spark, sfDir, "lineitem")
           .filter(col("l_orderkey") % k === 0)
         val b = li.join(Sources.table(spark, sfDir, "orders"),
@@ -336,7 +325,6 @@ object ScaleProbe {
       "cms" -> { k =>
         // the registered a_cms shape scaled by users: 3-row hashed
         // daily partials, sum-merged, probed by broadcast join
-        graft.functions.Md5PrefixLong.register(spark)
         val base = Sources.table(spark, sfDir, "events")
           .filter(col("user_id") % k === 0)
           .select(concat(col("event_type"), lit(":"), col("user_id"))
@@ -390,7 +378,6 @@ object ScaleProbe {
       "audio_energy" -> { k =>
         // the registered mm_audio_energy shape: per-doc fixed 8×8
         // window framing via the native byte fold — row-linear
-        graft.functions.ByteWindowFold.register(spark)
         docFrac(k)
           .withColumn("h", concat(sha2(col("text"), 256),
             sha2(concat(col("text"), lit("x")), 256)))
@@ -461,7 +448,6 @@ object ScaleProbe {
       "scene_detect" -> { k =>
         // the registered mm_scene_detect shape: 16-frame explode via
         // the native byte fold, lag + running-sum windows per doc
-        graft.functions.ByteWindowFold.register(spark)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
         docFrac(k)
@@ -532,7 +518,6 @@ object ScaleProbe {
       "negative_sample" -> { k =>
         // the registered sample_negative shape scaled by customers
         // (draw_mod64 splitmix draws, matching the r15 rewrite)
-        graft.functions.DrawMod64.register(spark)
         val pos = Sources.table(spark, sfDir, "lineitem")
           .join(Sources.table(spark, sfDir, "orders")
               .filter(col("o_custkey") % k === 0),
@@ -747,7 +732,6 @@ object ScaleProbe {
         // mm_pair_align scaled by docs: derived 32-d image vectors,
         // two equi-joins against the text-embedding slice, one dot
         // per side — row-linear, no pair blowup
-        graft.functions.LongArrayDot.register(spark)
         val img = docFrac(k)
           .withColumn("hh", hex(sha2(col("text"), 256)))
           .select(col("doc_id"), expr("""transform(sequence(0, 31),
@@ -1051,7 +1035,6 @@ object ScaleProbe {
           .unionByName(payload
             .select((col("doc_id") * 2 + 1).as("clip_id"),
               substring(col("h"), 17, 128).as("ph")))
-        graft.functions.ByteWindowFold.register(spark)
         val w = Window.partitionBy(col("clip_id")).orderBy(col("window_idx"))
         val peaks = clips
           .select(col("clip_id"), posexplode(expr(
@@ -1111,7 +1094,6 @@ object ScaleProbe {
       "png_roundtrip" -> { k =>
         // container encode (SQL) + full decode (native expression):
         // per-row work, embarrassingly parallel — must be linear
-        graft.functions.PngDecode.register(spark)
         graft.operators.MultimodalQueries.pngRoundtrip(docFrac(k))
       },
       "zip_roundtrip" -> (k =>

@@ -359,9 +359,6 @@ object SqlSurface {
     * parameters. */
   def registerCorpusFunctions(spark: SparkSession, dir: String): Unit = {
     Sources.registerAll(spark, dir)
-    // the maxsim body calls the native expressions from SQL
-    graft.functions.Md5PrefixLong.register(spark)
-    graft.functions.LongArrayDot.register(spark)
     graft.operators.Corpus
       .minhashPairs(spark.table("documents"), minJaccard = 0.0)
       .createOrReplaceTempView("minhash_scored")
@@ -532,7 +529,6 @@ object SqlSurface {
                ORDER BY h, doc_id) AS BIGINT) AS pos
       FROM b
     """)
-    graft.functions.RegAgg.register(spark)
     spark.sql("""
       CREATE OR REPLACE TEMPORARY FUNCTION corpus_novelty(ref_max_id BIGINT)
       RETURNS TABLE

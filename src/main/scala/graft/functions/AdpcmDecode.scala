@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -165,9 +164,4 @@ object AdpcmDecode {
     new GenericArrayData(Array(1L, rate, spb.toLong, nBlocks.toLong,
       nSamples, sum, first, last))
   }
-
-  /** Register `adpcm_decode(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adpcm_decode", exprs => AdpcmDecode(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -201,13 +200,6 @@ object ArchiveWrite {
     }
     out.write(new Array[Byte](1024), 0, 1024) // two zero EOF blocks
     out.toByteArray
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zip_write", exprs => ZipWrite(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tar_write", exprs => TarWrite(exprs(0)), "built-in")
   }
 }
 

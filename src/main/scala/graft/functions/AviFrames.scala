@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -100,9 +99,4 @@ object AviFrames {
     if (!walkChunks(12, (8 + riffSize).toInt, inMovi = false)) return null
     new GenericArrayData(out.toArray[Any])
   }
-
-  /** Register `avi_frames(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avi_frames", exprs => AviFrames(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -108,9 +107,4 @@ object BmpDecode {
     new GenericArrayData(Array(1L, w.toLong, h.toLong, 24L,
       stride.toLong, sumRgb, sumBlue, topLeft))
   }
-
-  /** Register `bmp_decode(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bmp_decode", exprs => BmpDecode(exprs(0)), "built-in")
 }

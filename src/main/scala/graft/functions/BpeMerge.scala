@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -108,15 +107,4 @@ object BpeMerge {
     }
     UTF8String.fromString(out.toString)
   }
-
-  /** Register `bpe_merge` in the session's function registry (the
-    * LongArrayDot pattern — idempotent, replace-warns only). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_merge",
-      exprs => {
-        require(exprs.length == 3, "bpe_merge(s, bl, br) takes 3 args")
-        BpeMerge(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
 }

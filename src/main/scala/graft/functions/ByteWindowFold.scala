@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -109,12 +108,6 @@ object ByteWindowFold {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `byte_window_fold(bin, winLen, mode)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_window_fold",
-      exprs => ByteWindowFold(exprs(0), exprs(1), exprs(2)), "built-in")
 
   /** Convenience literal-mode constructor for the extensions path. */
   def apply(bin: Expression, winLen: Int, mode: String): ByteWindowFold =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -561,14 +560,6 @@ object Bzip2 {
     w.put(0x177245385090L, 48)
     w.put(combined.toLong & 0xffffffffL, 32)
     w.finishToBytes()
-  }
-
-  /** Register `bzip2_write(bin)` and `bzip2_read(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bzip2_write", exprs => Bzip2Write(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bzip2_read", exprs => Bzip2Read(exprs(0)), "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -261,14 +260,6 @@ object Deflate {
       } finally inf.end()
     }
     acc.toArray
-  }
-
-  /** Register `gzip_write(bin)` and `gzip_members(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gzip_write", exprs => GzipWrite(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gzip_members", exprs => GzipMembers(exprs(0)), "built-in")
   }
 }
 

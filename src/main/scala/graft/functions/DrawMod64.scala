@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,14 +81,6 @@ object DrawMod64 {
 
   def draw(a: Long, b: Long, c: Long, n: Long): Long =
     java.lang.Long.remainderUnsigned(mix(a, b, c), n)
-
-  /** Register `draw_mod64` so expr() strings and spark.sql can call
-    * it. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "draw_mod64", exprs =>
-        DrawMod64(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
 }
 
 /** Renders the DuckDB twin of [[DrawMod64]]: a CTE chain computing the

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -510,9 +509,4 @@ object FlacDecode {
     * constant rule), for fixture construction in mm_decode_flac. */
   def crc16TabSql: String =
     Crc16Tab.mkString("array(", ", ", ")")
-
-  /** Register `flac_decode(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "flac_decode", exprs => FlacDecode(exprs(0)), "built-in")
 }

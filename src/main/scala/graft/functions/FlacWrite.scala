@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -214,10 +213,6 @@ object FlacWrite {
     withCrc(body.length + 1) = (crc & 0xff).toByte
     withCrc
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "flac_write", exprs => FlacWriteExpr(exprs.head), "built-in")
 }
 
 /** `flac_write(pcm)` — mono 8-bit FLAC encode (fixed predictors +

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -301,13 +300,5 @@ object GifDecode {
             f.w.toLong, f.h.toLong, f.nPx, f.sum, f.first, f.last)
         }.toArray[Any])
     }
-  }
-
-  /** Register `gif_decode(bin)` and `gif_frames(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gif_decode", exprs => GifDecode(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gif_frames", exprs => GifFrames(exprs(0)), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -122,9 +121,4 @@ object Gunzip {
       case _: java.util.zip.DataFormatException => null
     } finally inf.end()
   }
-
-  /** Register `gunzip(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gunzip", exprs => Gunzip(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
@@ -95,11 +94,9 @@ case class HilbertD(left: Expression, right: Expression, bits: Int)
 }
 
 object HilbertD {
-  /** The one `exprs => HilbertD` builder BOTH registration paths use
-    * (temp-function [[register]] and the session-extensions
-    * injectFunction in GraftExtensions) — accepts Int or Long bits
-    * literals so `hilbert_d(x, y, 16)` and `hilbert_d(x, y, 16L)`
-    * behave identically regardless of how the function was installed. */
+  /** The `hilbert_d` builder in the GraftExtensions function table —
+    * accepts Int or Long bits literals so `hilbert_d(x, y, 16)` and
+    * `hilbert_d(x, y, 16L)` behave identically. */
   def fromExprs(exprs: Seq[Expression]): HilbertD = {
     val b = exprs(2) match {
       case Literal(v: Int, IntegerType) => v
@@ -109,10 +106,4 @@ object HilbertD {
     }
     HilbertD(exprs(0), exprs(1), b)
   }
-
-  /** Register `hilbert_d(x, y, bits)` (bits must be an int literal)
-    * in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_d", fromExprs, "built-in")
 }

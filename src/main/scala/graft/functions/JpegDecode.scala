@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -496,14 +495,5 @@ object JpegDecode {
     }
     new GenericArrayData(Array(1L, c.w.toLong, c.h.toLong,
       (c.blocksW * c.blocksH).toLong, sumR, sumG, sumB, first, last))
-  }
-
-  /** Register `jpeg_decode(bin)` and `jpeg_decode_rgb(bin)`.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_decode", exprs => JpegDecode(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_decode_rgb", exprs => JpegDecodeRgb(exprs(0)), "built-in")
   }
 }

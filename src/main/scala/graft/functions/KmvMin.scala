@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -137,8 +136,4 @@ case class KmvMin(
 object KmvMin {
   /** Sorted distinct prefix: `vals[0..n)` ascending. */
   final class Buf(val vals: Array[Long], var n: Int)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_min", exprs => KmvMin(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -64,12 +63,4 @@ case class LongArrayDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LongArrayDot =
     copy(left = newLeft, right = newRight)
-}
-
-object LongArrayDot {
-  /** Register `long_dot` in the session's function registry so expr()
-    * strings and spark.sql can call it. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongArrayDot(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
@@ -77,13 +76,6 @@ object Md5PrefixLong {
     acc
   }
 
-  /** Register `md5_prefix_long` in the session's function registry so
-    * expr() strings and spark.sql can call it. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix_long", exprs => Md5PrefixLong(exprs(0), exprs(1)),
-      "built-in")
-
   /** Count-Min sketch geometry + the ONE bucket-hash expression every
     * CMS path shares (batch `a_cms`, `cmsPartialsStream`, the
     * ScaleProbe row). Partials from different paths are sum-mergeable
@@ -91,7 +83,7 @@ object Md5PrefixLong {
     * expression makes that a compile-time property instead of five
     * copy-pasted strings. The DuckDB oracle keeps its own literal
     * replica (that IS the cross-engine twin, kept in sync like every
-    * oracle). Caller must have invoked [[register]] on the session. */
+    * oracle). Resolves in a session carrying GraftExtensions. */
   val CmsRows = 3
   val CmsWidth = 64L
   def cmsBucket(rCol: String, keyCol: String)

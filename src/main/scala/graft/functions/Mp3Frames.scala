@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -160,10 +159,6 @@ object Mp3Frames {
       case _: ArrayIndexOutOfBoundsException => null
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mp3_frames", exprs => Mp3FramesExpr(exprs.head), "built-in")
 }
 
 /** `mp3_frames(bytes)` — ID3v2 + MPEG frame walk; NULL on

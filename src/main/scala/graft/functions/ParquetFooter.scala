@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -264,11 +263,6 @@ object ParquetFooter {
       case _: ArrayIndexOutOfBoundsException => null
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parquet_footer", exprs => ParquetFooterExpr(exprs.head),
-      "built-in")
 }
 
 /** `parquet_footer(bytes)` — from-scratch thrift-compact footer

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -603,11 +602,4 @@ object PdfText {
     }
     true
   }
-
-  /** ISO-8859-1 decoded per PDF string semantics (byte = code point
-    * for the synthesized ASCII gate; a full reader would map the
-    * font encoding). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pdf_text", exprs => PdfText(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -164,9 +163,4 @@ object PngDecode {
     new GenericArrayData(Array(1L, w.toLong, h.toLong, depth,
       nRaw.toLong, sum, px(0).toLong, px(px.length - 1).toLong))
   }
-
-  /** Register `png_decode(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_decode", exprs => PngDecode(exprs(0)), "built-in")
 }

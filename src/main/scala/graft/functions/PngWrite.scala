@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -165,9 +164,4 @@ object PngWrite {
     chunk("IEND", Array.empty[Byte])
     out.toByteArray
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_write", exprs => PngWrite(exprs(0), exprs(1), exprs(2)),
-      "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -182,17 +181,4 @@ case class RegMerge(
   override protected def withNewChildrenInternal(
       c: IndexedSeq[Expression]): RegMerge =
     copy(regs = c(0), mExpr = c(1))
-}
-
-object RegAgg {
-  /** Register `hll_reg_update` / `hll_reg_merge` for expr() strings
-    * and spark.sql. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_reg_update",
-      exprs => RegUpdate(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_reg_merge",
-      exprs => RegMerge(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -106,13 +105,6 @@ object SnappyRead {
 
   def write(data: Array[Byte]): Array[Byte] =
     org.xerial.snappy.Snappy.compress(data)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "snappy_read", exprs => SnappyReadExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "snappy_write", exprs => SnappyWriteExpr(exprs.head), "built-in")
-  }
 }
 
 /** `snappy_read(bytes)` — from-scratch raw-block decoder; NULL on any

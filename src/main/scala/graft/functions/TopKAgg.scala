@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -16,7 +15,7 @@ import org.apache.spark.sql.types._
   *
   * Why not `row_number() OVER (...) <= k`? Spark 4's
   * InferWindowGroupLimit already prunes that pattern map-side to
-  * groups·k rows per mapper (measured: graft.TopKBench), so the naive
+  * groups·k rows per mapper (measured: PERF.md round 5), so the naive
   * "window shuffles Θ(input)" claim is stale. What the heap aggregate
   * still buys, measured at sf0.1 (100k events / 1500 groups):
   *   - shuffle RECORDS: one partial-buffer row per group per mapper
@@ -197,17 +196,4 @@ case class TopKMin(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKMin =
     copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-object TopKAgg {
-  /** Register `topk_min` / `topk_min_distinct` so expr() strings and
-    * spark.sql can call them (the analyzer wraps the
-    * AggregateFunction itself). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_min", exprs => TopKMin(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_min_distinct",
-      exprs => TopKMin(exprs(0), exprs(1), distinct = true), "built-in")
-  }
 }

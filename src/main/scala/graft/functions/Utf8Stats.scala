@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,9 +103,4 @@ object Utf8Stats {
     }
     InternalRow(n.toLong, ascii, two, three, four, bad, bad == 0L)
   }
-
-  /** Register `utf8_stats(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "utf8_stats", exprs => Utf8Stats(exprs(0)), "built-in")
 }

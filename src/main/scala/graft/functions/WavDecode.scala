@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -128,9 +127,4 @@ object WavDecode {
     new GenericArrayData(Array(1L, ch, rate, bits, dataLen.toLong,
       dataLen / blockAlign, energy))
   }
-
-  /** Register `wav_decode(bin)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_decode", exprs => WavDecode(exprs(0)), "built-in")
 }

@@ -204,7 +204,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * the batch signature frame by construction, not by duplication. */
   private[graft] def shingleHashRows(docs: DataFrame,
                                      carry: Seq[String] = Nil): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     docs.select(col("doc_id") +: split(col("text"), " ").as("raw") +:
         carry.map(col): _*)
       .withColumn("i", explode(expr(
@@ -345,7 +344,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * doc (bounded by doc length), all counts map-side-combinable. */
   def spanMaskPlan(docs: DataFrame, rateDen: Long = 20L,
                    spanLen: Int = 3): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val toks = docs
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
@@ -451,7 +449,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * through smaller buckets. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 6,
                    bucketCap: Int = 512): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val tok = docs
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("t"))
@@ -696,7 +693,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     allPairsShingles(docs)
 
   private def allPairsShingles(docs: DataFrame): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     // widenScan: per-shingle md5 over a 1-split scan (Engine.widenScan
     // scaladoc; the share token below hashes the raw docs plan)
     def build: DataFrame = graft.Engine.widenScan(docs)
@@ -859,7 +855,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * (doc_id, n_shingles, n_novel, novelty_ppm) for docs with
     * `doc_id >= refMaxId`. */
   def noveltyRate(docs: DataFrame, refMaxId: Long = 250L): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val sh = docs
       .select(col("doc_id"), split(col("text"), " ").as("raw"))
       .withColumn("i", explode(expr(
@@ -903,7 +898,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * k, w, maxDocFreq) per session). */
   private def winnowFp(docs: DataFrame, k: Int, w: Int,
                        maxDocFreq: Long): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     def build: DataFrame = {
       // widenScan: per-character-position hashing over a 1-split scan
       // (Engine.widenScan scaladoc; token computed on raw docs below)
@@ -1008,7 +1002,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * ([[spanDedupIncremental]]) consume the identical frame: build it
     * once per (corpus, k) per session. */
   private def spanWindows(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     graft.Engine.materializeShared(docs.sparkSession,
       graft.Engine.planToken(docs, extra = s"span_windows:$k"),
       // widenScan: the per-character-position md5 explode (1.29M
@@ -1424,7 +1417,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * (doc_id, chunk_idx, start_pos, n_toks, chunk_sha,
     * n_docs_sharing). */
   def cdcChunks(docs: DataFrame): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val toks = docs
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
@@ -1597,7 +1589,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * Returns (doc_id, difficulty, phase 1..4, shard, ord). */
   def curriculumOrder(docs: DataFrame, difficulty: Column,
                       nShards: Int = 8): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val d = docs.select(col("doc_id"),
       difficulty.cast("long").as("difficulty"))
     val cum = d.groupBy(col("difficulty"))
@@ -2088,8 +2079,6 @@ object Corpus extends org.apache.spark.internal.Logging {
   def maxsimSearch(docs: DataFrame, terms: Seq[String],
                    topK: Int = 20, dims: Int = 8): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.Md5PrefixLong.register(s)
-    graft.functions.LongArrayDot.register(s)
     def vec(c: String): String =
       s"transform(sequence(0, ${dims - 1}), d -> " +
         s"md5_prefix_long(concat($c, ':', CAST(d AS STRING)), 8) " +
@@ -2793,7 +2782,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * it on a re-exported corpus and diffing IS the integrity check.
     * One scan, map-side-combined agg, nShards rows. */
   def shardManifest(docs: DataFrame, nShards: Int = 8): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     shardAssign(docs, nShards)
       .select(col("doc_id"), col("ntok"), col("shard_id"))
       .join(docs.select(col("doc_id"),
@@ -2815,7 +2803,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     *
     * Returns (doc_id, ntok, h, bucket, cum_excl, total). */
   private def tokenCumsum(docs: DataFrame): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val base = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("ntok"))
       .withColumn("h", expr("md5_prefix_long(CAST(doc_id AS STRING), 14)"))
@@ -2890,7 +2877,6 @@ object Corpus extends org.apache.spark.internal.Logging {
                   padMultiple: Long = 32L): DataFrame = {
     require(maxBatchTokens >= padMultiple && padMultiple >= 1L,
       "batchAssign: need maxBatchTokens >= padMultiple >= 1")
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val base = docs
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("ntok"))
@@ -2992,7 +2978,6 @@ object Corpus extends org.apache.spark.internal.Logging {
   def bpeFit(docs: DataFrame, merges: Int = 8): DataFrame = {
     require(merges >= 1, "merges must be >= 1")
     val spark = docs.sparkSession
-    graft.functions.BpeMerge.register(spark)
     // symbol state `s` = space-joined symbols (symbols are letter
     // sequences — never contain spaces), initially one char each
     val words = docs
@@ -3065,7 +3050,6 @@ object Corpus extends org.apache.spark.internal.Logging {
   def bpeSegments(docs: DataFrame, merges: DataFrame, nMerges: Int,
                   sharedToken: Option[String] = None): DataFrame = {
     require(nMerges >= 1, "nMerges must be >= 1")
-    graft.functions.BpeMerge.register(docs.sparkSession)
     // a degenerate training corpus can fit FEWER than nMerges rules;
     // the per-round broadcast below would then be empty and silently
     // empty the whole segmentation (every word lost to the crossJoin)
@@ -3155,7 +3139,6 @@ object Corpus extends org.apache.spark.internal.Logging {
     * err_ppm). */
   def corpusOverlap(docs: DataFrame, side: Column,
                     k: Int = 256): DataFrame = {
-    graft.functions.Md5PrefixLong.register(docs.sparkSession)
     val base = docs.select(side.as("side"),
       split(col("text"), " ").as("raw"))
     val sh = base

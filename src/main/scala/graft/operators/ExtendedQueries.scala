@@ -696,7 +696,6 @@ object ExtendedQueries {
     "sample_negative" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.DrawMod64.register(s)
         val pos = t(s, dir, "lineitem")
           .join(t(s, dir, "orders"),
             col("l_orderkey") === col("o_orderkey"))
@@ -1446,7 +1445,6 @@ object ExtendedQueries {
     "graph_anf_kmv" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.KmvMin.register(s)
         val edges = tradeEdges(s, dir)
         var state = graft.Engine.materialize(
           edges.select($"src".as("node")).distinct()
@@ -1565,7 +1563,6 @@ object ExtendedQueries {
     "graph_anf_hll" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.RegAgg.register(s)
         val edges = tradeEdges(s, dir)
         val rhoSql = "CASE WHEN w = 0L THEN 28L " +
           "ELSE 28L - length(bin(w)) END"
@@ -2811,7 +2808,6 @@ object ExtendedQueries {
     "a_topk_agg" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.TopKAgg.register(s)
         t(s, dir, "events")
           .withColumn("cents", round($"value" * 100).cast(LongType))
           .groupBy($"event_type")
@@ -2852,8 +2848,6 @@ object ExtendedQueries {
     "a_hll_users" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.RegAgg.register(s)
-        graft.functions.Md5PrefixLong.register(s)
         val sk = t(s, dir, "events")
           .select($"event_type", $"user_id")
           // md5_prefix_long ≡ conv(substring(md5)) — per event row
@@ -2925,8 +2919,6 @@ object ExtendedQueries {
     "a_hll_rollup" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.RegAgg.register(s)
-        graft.functions.Md5PrefixLong.register(s)
         val daily = t(s, dir, "events")
           .select($"event_type", $"user_id",
             expr("(unix_timestamp(ts) div 86400)").as("day"))
@@ -3005,7 +2997,6 @@ object ExtendedQueries {
     "a_sample_bottomk" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.TopKAgg.register(s)
         val u = t(s, dir, "events")
           .select($"event_type", $"user_id").distinct()
           .withColumn("h", expr("CAST(conv(substring(md5(" +

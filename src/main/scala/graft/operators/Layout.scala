@@ -234,7 +234,6 @@ object Layout {
     // generated method past the JVM JIT's 8 KB compile limit and run
     // as interpreted bytecode: measured 5–13 s vs scan-speed for
     // 600k rows at local[32].
-    graft.functions.HilbertD.register(df.sparkSession)
     val carry = df.columns
     df.crossJoin(broadcast(ext)).select(
       carry.map(col) :+
@@ -299,7 +298,6 @@ object Layout {
   def zorderWrite(df: DataFrame, x: Column, y: Column, bits: Int,
                   numFiles: Int, path: String,
                   curve: String = "morton"): Unit = {
-    graft.functions.HilbertD.register(df.sparkSession)
     val ext = df.agg(min(x), max(x), min(y), max(y), count(lit(1))).head()
     if (ext.isNullAt(0)) {
       // distinguish 'no rows' (write the empty table + sentinel meta)
@@ -383,9 +381,8 @@ object Layout {
   /** Curve key under FROZEN bounds (values outside them clamp to the
     * edge cells — late data beyond the original range still lands on
     * the curve, merely less selectively). Dispatches on `m.curve`;
-    * the hilbert branch resolves the registered `hilbert_d` function
-    * (callers with a session — zorderWrite/zorderCompact — register
-    * it first). */
+    * the hilbert branch resolves the `hilbert_d` function that
+    * GraftExtensions injects. */
   def frozenKey(m: ZorderMeta, x: Column, y: Column): Column = {
     requireExact(m)
     require(m.curve == "morton" || m.curve == "hilbert",
@@ -480,7 +477,6 @@ object Layout {
     * Returns (filesRewritten, filesUntouched). */
   def zorderCompact(spark: SparkSession, path: String, delta: DataFrame,
                     x: Column, y: Column): (Int, Int) = {
-    graft.functions.HilbertD.register(spark)
     val m = readMeta(spark, path) // carries the table's curve
     val hadoopFs = fs(spark, path)
 

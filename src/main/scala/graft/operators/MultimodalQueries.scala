@@ -61,7 +61,6 @@ object MultimodalQueries {
     * (doc_id, fmt_ok, width, height, bit_depth, n_raw, sum_px,
     * first_px, last_px). */
   def pngRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.PngDecode.register(docsDf.sparkSession)
     def pxAt(j: String): String =
       s"CAST(conv(substr(ph, 2 * ($j) + 1, 2), 16, 10) AS BIGINT)"
     // scanlines: filter type 1 (Sub) — stored bytes are deltas
@@ -115,7 +114,6 @@ object MultimodalQueries {
     * public so ScaleProbe can ride it. Returns (doc_id, n_bytes,
     * text_out). */
   def bzip2Roundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.Bzip2.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -131,8 +129,6 @@ object MultimodalQueries {
     * mm_deflate_roundtrip body, public so ScaleProbe can ride it.
     * Returns (doc_id, n_bytes, text_out). */
   def deflateRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.Gunzip.register(docsDf.sparkSession)
-    graft.functions.Deflate.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -149,7 +145,6 @@ object MultimodalQueries {
     * ScaleProbe can ride it. Returns (shard, member_idx, n_bytes,
     * text_out). */
   def shardRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.Deflate.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -172,8 +167,6 @@ object MultimodalQueries {
     * ScaleProbe can ride it. Returns (shard, member_idx, name,
     * method, size, crc_ok, payload_sum). */
   def zipWriteRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.ZipList.register(docsDf.sparkSession)
-    graft.functions.ArchiveWrite.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -197,8 +190,6 @@ object MultimodalQueries {
     * ride it. Returns (shard, member_idx, name, size, typeflag,
     * cksum_ok, payload_sum). */
   def tarWriteRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.TarList.register(docsDf.sparkSession)
-    graft.functions.ArchiveWrite.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -225,8 +216,6 @@ object MultimodalQueries {
     * public so ScaleProbe can ride it. Returns (doc_id, fmt_ok,
     * width, height, bit_depth, n_raw, sum_px, first_px, last_px). */
   def pngWriteRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.PngDecode.register(docsDf.sparkSession)
-    graft.functions.PngWrite.register(docsDf.sparkSession)
     docsDf
       .withColumn("b", col("text").cast("binary"))
       .withColumn("n", octet_length(col("b")).cast("long"))
@@ -251,7 +240,6 @@ object MultimodalQueries {
     * mm_lz4_roundtrip body, public so ScaleProbe can ride it.
     * Returns (doc_id, n_bytes, text_out). */
   def lz4Roundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.Lz4.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -268,7 +256,6 @@ object MultimodalQueries {
     * mm_snappy_roundtrip body, public so ScaleProbe can ride it.
     * Returns (doc_id, n_bytes, text_out). */
   def snappyRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.SnappyRead.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -286,7 +273,6 @@ object MultimodalQueries {
     * so ScaleProbe can ride it. Returns (doc_id, n_bytes,
     * text_out). */
   def zstdRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.ZstdCodec.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -304,7 +290,6 @@ object MultimodalQueries {
     * ScaleProbe can ride it. Returns (shard, n_docs, n_bytes,
     * text_out = the shard's docs concatenated in doc order). */
   def zstdShardRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.ZstdCodec.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -326,7 +311,6 @@ object MultimodalQueries {
     * long form — the mm_avro_ingest body, public so ScaleProbe can
     * ride it. Returns (shard, row, field, value). */
   def avroIngest(docsDf: DataFrame): DataFrame = {
-    graft.functions.AvroOcf.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -350,7 +334,6 @@ object MultimodalQueries {
     * ScaleProbe can ride it. Returns one row per stop_time_update. */
   def gtfsRtRoundtrip(ordersAll: DataFrame, lineitemAll: DataFrame)
       : DataFrame = {
-    graft.functions.GtfsRt.register(ordersAll.sparkSession)
     // the o_orderkey % 4 == 0 subset keeps the gated output at
     // ~150k rows at sf0.1 (the sample_negative output-volume
     // lesson) while every wire shape — negative delays included —
@@ -410,10 +393,6 @@ object MultimodalQueries {
     * corpus_targz_shard body, public so ScaleProbe can ride it.
     * Returns (shard, member_idx, name, size, payload_sum). */
   def targzShardRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.TarList.register(docsDf.sparkSession)
-    graft.functions.ArchiveWrite.register(docsDf.sparkSession)
-    graft.functions.Gunzip.register(docsDf.sparkSession)
-    graft.functions.Deflate.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -442,7 +421,6 @@ object MultimodalQueries {
     * Returns (gen, feed, feed_ts, blob). */
   def gtfsRtFeedGens(orders: DataFrame, lineitem: DataFrame,
                      gens: Int): DataFrame = {
-    graft.functions.GtfsRt.register(orders.sparkSession)
     val o = orders.filter(pmod(col("o_orderkey"), lit(8)) === 0)
     val li = lineitem.filter(pmod(col("l_orderkey"), lit(8)) === 0)
       .groupBy(col("l_orderkey"), col("l_linenumber"))
@@ -490,7 +468,6 @@ object MultimodalQueries {
     * text_out). */
   def zstIngest(docsDf: DataFrame): DataFrame = {
     val s = docsDf.sparkSession
-    graft.functions.ZstdCodec.register(s)
     val shards = docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -531,7 +508,6 @@ object MultimodalQueries {
     * public so ScaleProbe can ride it. Returns (doc_id, n_bytes,
     * text_out). */
   def xzRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.XzCodec.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -551,8 +527,6 @@ object MultimodalQueries {
     * body, public so ScaleProbe can ride it. Returns (shard, doc_id,
     * n_members, txt_sum, json_size). */
   def webdatasetRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.TarList.register(docsDf.sparkSession)
-    graft.functions.ArchiveWrite.register(docsDf.sparkSession)
     docsDf
       .withColumn("shard", expr("doc_id div 50"))
       .groupBy(col("shard"))
@@ -590,7 +564,6 @@ object MultimodalQueries {
     * ride it. Returns (doc_id, id3_size, id3_frames, n_frames,
     * total_samples, sample_rate, sum_frame_bytes). */
   def mp3Walk(docsDf: DataFrame): DataFrame = {
-    graft.functions.Mp3Frames.register(docsDf.sparkSession)
     docsDf
       .withColumn("title", concat(lit("doc "), col("doc_id")))
       .withColumn("tlen", length(col("title")).cast("long"))
@@ -629,8 +602,6 @@ object MultimodalQueries {
     * Returns (doc_id, ok, n_frames, n_samples, first_sample,
     * sum_samples, last_sample). */
   def flacWriteRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.FlacDecode.register(docsDf.sparkSession)
-    graft.functions.FlacWrite.register(docsDf.sparkSession)
     // widenScan: the per-row codec work otherwise pipelines into the
     // 1-split local scan and runs single-core (Engine.widenScan)
     graft.Engine.widenScan(docsDf)
@@ -654,7 +625,6 @@ object MultimodalQueries {
     * Returns (doc_id, ok, n_frames, n_samples, channels, bps,
     * sample_rate, first_sample, sum_samples, last_sample). */
   def flacRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.FlacDecode.register(docsDf.sparkSession)
     import graft.functions.FlacDecode.{crc16, crc8}
     // frame header: sync+0+fixed-blocking, bs=1024 (code 10),
     // rate=44100 (code 9), mono, bps=8 (code 1), frame 0
@@ -719,7 +689,6 @@ object MultimodalQueries {
     * subframe path. Returns the same 10 columns as
     * [[flacRoundtrip]]. */
   def flacRiceRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.FlacDecode.register(docsDf.sparkSession)
     import graft.functions.FlacDecode.{crc16, crc8}
     // frame header: bs=192 (code 1), rate 44100 (code 9), mono,
     // bps 8 (code 1), frame 0
@@ -788,7 +757,6 @@ object MultimodalQueries {
     * LZW compressor. Returns (doc_id, fmt_ok, width, height, gct_n,
     * palette_sum, n_px, sum_idx, first_idx, last_idx). */
   def gifRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.GifDecode.register(docsDf.sparkSession)
     // palette entry i = (i, 255-i, 7i mod 256): readable back as a
     // pure-integer palette_sum, so the gate proves the color table
     // bytes were genuinely consumed
@@ -841,7 +809,6 @@ object MultimodalQueries {
     * this is genuine end-to-end). The mm_gif_frames body, public so
     * ScaleProbe can ride it. */
   def gifFramesRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.GifDecode.register(docsDf.sparkSession)
     val palette = "concat_ws('', transform(sequence(0, 127), i -> " +
       "concat(lpad(hex(i), 2, '0'), lpad(hex(255 - i), 2, '0'), " +
       "lpad(hex(i * 7 % 256), 2, '0'))))"
@@ -888,7 +855,6 @@ object MultimodalQueries {
     * last_px); with q = 16 the DC-only IDCT output is the exact
     * closed form 128 + 2·dc. */
   def jpegRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.JpegDecode.register(docsDf.sparkSession)
     docsDf
       .withColumn("ph", sha2(col("text"), 256))
       .withColumn("dc", expr(
@@ -928,7 +894,6 @@ object MultimodalQueries {
     * (doc_id, ok, width, height, n_blocks, sum_r, sum_g, sum_b,
     * first_rgb, last_rgb). */
   def jpegColorRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.JpegDecode.register(docsDf.sparkSession)
     docsDf
       .withColumn("ph", sha2(col("text"), 256))
       .withColumn("dy", expr(
@@ -981,8 +946,6 @@ object MultimodalQueries {
     * Returns (doc_id, frame, ok, width, height, sum_px, first_px,
     * last_px). */
   def mjpegRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.AviFrames.register(docsDf.sparkSession)
-    graft.functions.JpegDecode.register(docsDf.sparkSession)
     // the 171-byte fixed-layout grayscale JPEG, DC from sha byte f
     val jpegHex = "concat('FFD8', " +
       "'FFE000104A46494600010100000100010000', " +
@@ -1032,7 +995,6 @@ object MultimodalQueries {
     * the malformed classes live in PdfSpec. Returns (doc_id, ok,
     * n_objs, n_streams, n_chars, text_out). */
   def pdfRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.PdfText.register(docsDf.sparkSession)
     docsDf
       .withColumn("esc", regexp_replace(regexp_replace(regexp_replace(
         col("text"), "\\\\", "\\\\\\\\"), "\\(", "\\\\("),
@@ -1089,7 +1051,6 @@ object MultimodalQueries {
     * n_chars, text_out); n_objs = 3 direct + 3 compressed, n_streams
     * = ObjStm + content + XRef carriers. */
   def pdfXrefRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.PdfText.register(docsDf.sparkSession)
     val m2 = "<< /Type /Catalog /Pages 3 0 R >>"
     val m3 = "<< /Type /Pages /Kids [4 0 R] /Count 1 >>"
     val m4 = "<< /Type /Page /Parent 3 0 R /Contents 5 0 R >>"
@@ -1149,7 +1110,6 @@ object MultimodalQueries {
     * columns, the W-packed rows byte-exact hex. n_objs = 4 direct
     * (ObjStm, content, both XRef sections) + 3 compressed. */
   def pdfXrefPrevRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.PdfText.register(docsDf.sparkSession)
     val m2 = "<< /Type /Catalog /Pages 3 0 R >>"
     val m3 = "<< /Type /Pages /Kids [4 0 R] /Count 1 >>"
     val m4 = "<< /Type /Page /Parent 3 0 R /Contents 5 0 R >>"
@@ -1214,7 +1174,6 @@ object MultimodalQueries {
     * ScaleProbe can ride it. Returns (doc_id, name, method, size,
     * crc_ok, payload_sum). */
   def zipRoundtrip(docsDf: DataFrame): DataFrame = {
-    graft.functions.ZipList.register(docsDf.sparkSession)
     import org.apache.spark.sql.functions.{col, concat, explode,
       expr, length, lit, octet_length}
     docsDf
@@ -1263,7 +1222,6 @@ object MultimodalQueries {
     "mm_decode" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         withBlob(docs(s, dir))
           .withColumn("h", hex($"img")) // 64 hex chars = 32 bytes
           .select(
@@ -1303,7 +1261,6 @@ object MultimodalQueries {
     "mm_resize" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         withBlob(docs(s, dir))
           .select($"doc_id",
             posexplode(expr("byte_window_fold(img, 4, 'sum')"))
@@ -1387,7 +1344,6 @@ object MultimodalQueries {
         // dominated the query (PERF.md round 9; the HilbertD lesson
         // class — AHashSpec pins bit-identity with the composed form,
         // and the DuckDB oracle still replays the hex arithmetic).
-        graft.functions.AHash64.register(s)
         val hashed = graft.Engine.materialize(
           inst.select($"img_id", expr("ahash64(unhex(hh))").as("ah")),
           key = "img_id", name = "phash_hashed")
@@ -1492,7 +1448,6 @@ object MultimodalQueries {
     "mm_audio_energy" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         docs(s, dir)
           .withColumn("h",
             concat(sha2($"text", 256), sha2(concat($"text", lit("x")), 256)))
@@ -1534,7 +1489,6 @@ object MultimodalQueries {
     "mm_speech_segments" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"doc_id").orderBy($"window_idx")
         val wSeg = org.apache.spark.sql.expressions.Window
@@ -1605,7 +1559,6 @@ object MultimodalQueries {
     "mm_audio_fingerprint" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"doc_id").orderBy($"window_idx")
         val peaks = docs(s, dir)
@@ -1677,7 +1630,6 @@ object MultimodalQueries {
     "mm_audio_match" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"clip_id").orderBy($"window_idx")
         val payload = docs(s, dir)
@@ -1775,7 +1727,6 @@ object MultimodalQueries {
     "mm_video_match" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.ByteWindowFold.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"clip_id").orderBy($"frame_idx")
         val wCum = w.rowsBetween(
@@ -1903,7 +1854,6 @@ object MultimodalQueries {
         import s.implicits._
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"doc_id").orderBy($"frame_idx")
-        graft.functions.ByteWindowFold.register(s)
         docs(s, dir)
           .withColumn("h", concat(
             sha2($"text", 256), sha2(concat($"text", lit("a")), 256),
@@ -1972,7 +1922,6 @@ object MultimodalQueries {
     "mm_pair_align" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.LongArrayDot.register(s)
         val img = withBlob(docs(s, dir)).withColumn("hh", hex($"img"))
           .select($"doc_id", expr("""transform(sequence(0, 31),
             i -> CAST(conv(substr(hh, 2 * i + 1, 2), 16, 10) AS BIGINT)
@@ -2039,7 +1988,6 @@ object MultimodalQueries {
     "mm_decode_wav" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.WavDecode.register(s)
         def le(e: String, n: Int): String = leHex(e, n)
         val hdr = Seq(
           "'52494646'", le("100", 4), "'57415645'",       // RIFF…WAVE
@@ -2111,7 +2059,6 @@ object MultimodalQueries {
     "mm_decode_bmp" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.BmpDecode.register(s)
         val pixels = "array_join(transform(sequence(0, h - 1), r -> " +
           "concat(substr(ph, r * 6 * w + 1, 6 * w), " +
           "repeat('00', st - 3 * w))), '')"
@@ -2383,7 +2330,6 @@ object MultimodalQueries {
     "mm_decode_adpcm" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.AdpcmDecode.register(s)
         docs(s, dir)
           .withColumn("ph", sha2($"text", 256))
           .withColumn("idx0", expr(
@@ -2493,7 +2439,6 @@ object MultimodalQueries {
     "mm_utf8_stats" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Utf8Stats.register(s)
         docs(s, dir)
           .withColumn("tail", expr(
             "CASE doc_id % 4 WHEN 0 THEN 'FF' WHEN 1 THEN 'C3A9' " +
@@ -2662,7 +2607,6 @@ object MultimodalQueries {
     "mm_gunzip" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Gunzip.register(s)
         docs(s, dir)
           .withColumn("n", octet_length($"text").cast("long"))
           .withColumn("gz", expr("concat('1F8B08000000000000FF', " +
@@ -2701,7 +2645,6 @@ object MultimodalQueries {
     "corpus_warc_ingest" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Gunzip.register(s)
         docs(s, dir)
           .withColumn("warc", concat(
             lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: " +
@@ -2762,7 +2705,6 @@ object MultimodalQueries {
     "mm_tar_member" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.TarList.register(s)
         def ahex(str: String): String =
           str.getBytes("US-ASCII").map("%02x".format(_)).mkString
         // fixed-field checksum mass: mode+uid+gid ("0000644\0",
@@ -3429,7 +3371,6 @@ object MultimodalQueries {
     // bytes as rows — the ingest shape for any opaque blob format).
     "corpus_bz2_ingest" -> Q(
       fn = (s, dir) => {
-        graft.functions.Bzip2.register(s)
         val src = docs(s, dir)
           .select(concat(col("doc_id").cast("string"), lit("\t"),
             hex(col("text").cast("binary"))).as("value"))
@@ -3463,7 +3404,6 @@ object MultimodalQueries {
     // trailer path on every run, file-level, inside the plan.
     "corpus_gz_ingest" -> Q(
       fn = (s, dir) => {
-        graft.functions.Gunzip.register(s)
         val src = docs(s, dir)
           .select(concat(col("doc_id").cast("string"), lit("\t"),
             hex(col("text").cast("binary"))).as("value"))

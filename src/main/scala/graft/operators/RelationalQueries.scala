@@ -27,7 +27,6 @@ object RelationalQueries {
     * sum_values). */
   def parquetFooterAudit(docsDf: DataFrame): DataFrame = {
     val s = docsDf.sparkSession
-    graft.functions.ParquetFooter.register(s)
     val src = docsDf
       .withColumn("pt", (col("doc_id") % 4).cast(IntegerType))
       .select(col("doc_id"), col("text"), col("pt"))

@@ -686,7 +686,6 @@ object SessionQueries {
     "a_cms" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         val base = ev(s, dir)
           .select(concat($"event_type", lit(":"), $"user_id").as("key"),
             $"user_id",
@@ -764,7 +763,6 @@ object SessionQueries {
     "a_cms_join_size" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         val base = ev(s, dir)
           .select($"event_type", $"user_id",
             $"user_id".cast("string").as("key"))

@@ -149,16 +149,7 @@ object StreamingQueries {
                     mode: String = "complete"): DataFrame = {
     val q = out.writeStream.outputMode(mode)
       .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      // SPARK_GRAFT_STREAM_DEBUG=1: per-trigger durationMs breakdown
-      // (queryPlanning / addBatch / walCommit / ...) — the decomposition
-      // that tells a drain's fixed cost from its data cost
-      if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-        q.recentProgress.foreach(p =>
-          System.err.println(s"STREAMDBG $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} ${p.durationMs}"))
-    }
+    try q.processAllAvailable()
     finally {
       q.stop()
       // q.stop() does NOT unload the query's state-store providers:
@@ -257,7 +248,6 @@ object StreamingQueries {
     // round-3 centroids, and groups to the same exact-integer stats.
     "stream_kmeans_drift" -> Q(
       fn = (s, dir) => {
-        graft.functions.LongArrayDot.register(s)
         val all = Sources.table(s, dir, "embeddings")
           .withColumn("sv", expr("transform(CAST(embedding AS " +
             "ARRAY<DOUBLE>), x -> CAST(round(x * 100000.0) AS BIGINT))"))

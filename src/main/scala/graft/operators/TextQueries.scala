@@ -884,7 +884,6 @@ object TextQueries {
     "text_fingerprint" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         docs(s, dir)
           // md5_prefix_long ≡ conv(substring(md5)) — one hash per
           // token occurrence inside the lambda (r16 opt round)
@@ -1053,7 +1052,6 @@ object TextQueries {
     "sample_shuffle" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         docs(s, dir)
           .select($"doc_id", explode(expr("sequence(0, 1)")).as("epoch"))
           .withColumn("h", expr(
@@ -1841,7 +1839,6 @@ object TextQueries {
     "text_watermark" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         docs(s, dir)
           .select($"doc_id", split($"text", " ").as("raw"))
           .filter(size($"raw") >= 2)

@@ -28,7 +28,6 @@ object VectorQueries {
 
   /** embeddings with per-row quantized vector + scaled norm. */
   private def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.LongArrayDot.register(s)
     Sources.table(s, dir, "embeddings")
       .withColumn("sv", expr(
         "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(round(x * 100000.0) AS BIGINT))"))
@@ -701,7 +700,6 @@ object VectorQueries {
     "vector_matryoshka" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.LongArrayDot.register(s)
         val pref = emb(s, dir)
           .select($"vec_id", explode(expr("array(16, 32, 64)")).as("dp"),
             $"sv")

@@ -19,7 +19,6 @@ object Vectors {
   /** Add quantized vector (`sv ARRAY<BIGINT>`) + scaled norm (`nrm`)
     * columns; registers `long_dot` in the session. */
   def quantize(df: DataFrame, embeddingCol: String = "embedding"): DataFrame = {
-    graft.functions.LongArrayDot.register(df.sparkSession)
     df.withColumn("sv", expr(
         s"transform(CAST($embeddingCol AS ARRAY<DOUBLE>), x -> CAST(round(x * 100000.0) AS BIGINT))"))
       .withColumn("nrm", expr("long_dot(sv, sv)"))
@@ -98,7 +97,6 @@ object Vectors {
   def lshSearch(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
                 k: Int = 5, dim: Int = 64, nPlanes: Int = 16,
                 bands: Int = 4): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     // the (id, sv, nrm) projection and the banded signature frame each
     // feed TWO downstream consumers (query/candidate sides), so both
     // go through Engine.materialize — the embeddings source is scanned
@@ -156,7 +154,6 @@ object Vectors {
                           queryFilter: org.apache.spark.sql.Column,
                           k: Int = 5, dim: Int = 64, nPlanes: Int = 16,
                           bands: Int = 4): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val bitsPerBand = nPlanes / bands
     // content-identical to [[lshSearch]]'s frames — share the SAME
     // tokens so knn_lsh / knn_lsh_mp / ann_recall_mp build them once
@@ -249,7 +246,6 @@ object Vectors {
   def knnGraph(base: DataFrame, k: Int = 5, dim: Int = 64,
                nPlanes: Int = 16, bands: Int = 4,
                bucketCap: Int = 512): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val proj = graft.Engine.materialize(
       base.select(col("id"), col("sv"), col("nrm")),
       key = "id", name = "knng_vec")
@@ -295,7 +291,6 @@ object Vectors {
                      filterCol: String, k: Int = 5, dim: Int = 64,
                      nPlanes: Int = 16, bands: Int = 4,
                      bucketCap: Int = 512): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val proj = graft.Engine.materialize(
       base.select(col("id"), col("sv"), col("nrm"), col(filterCol)),
       key = "id", name = "flt_vec")
@@ -354,7 +349,6 @@ object Vectors {
                           oldGraph: DataFrame, k: Int = 5, dim: Int = 64,
                           nPlanes: Int = 16, bands: Int = 4,
                           bucketCap: Int = 512): DataFrame = {
-    graft.functions.LongArrayDot.register(oldBase.sparkSession)
     // append-only guard: evaluated through the _new flag every
     // candidate filter consumes, so it cannot be pruned away; empty
     // sides (NULL max/min) are vacuously append-only
@@ -432,7 +426,6 @@ object Vectors {
   def mipsSearch(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
                  k: Int = 5, dim: Int = 64, nPlanes: Int = 16,
                  bands: Int = 4): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val proj = graft.Engine.materialize(
       base.select(col("id"), col("sv"), col("nrm")),
       key = "id", name = "mips_vec")
@@ -494,7 +487,6 @@ object Vectors {
     * cosine). */
   def sq8Search(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
                 k: Int = 5, shortlist: Int = 20, dim: Int = 64): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     // per-dim symmetric scales: dims rows → one row of arrays; the
     // greatest(…, 1) guard keeps an all-zero dimension from dividing
     // by zero (its codes are all 0 either way)
@@ -557,7 +549,6 @@ object Vectors {
   def bqSearch(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
                k: Int = 5, shortlist: Int = 20, dim: Int = 64): DataFrame = {
     require(dim <= 64, "bqSearch packs sign bits into one 64-bit word")
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val codes = graft.Engine.materialize(
       base.withColumn("bits", expr(s"aggregate(sequence(0, $dim - 1), 0L, " +
           "(a, i) -> a + IF(element_at(sv, i + 1) > 0L, shiftleft(1L, i), 0L))"))
@@ -615,7 +606,6 @@ object Vectors {
   def pqSearch(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
                k: Int = 5, m: Int = 4, kCode: Int = 8, iters: Int = 2,
                shortlist: Int = 64, dim: Int = 64): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val spark = base.sparkSession
     val sw = dim / m
     val proj = graft.Engine.materialize(
@@ -714,7 +704,6 @@ object Vectors {
   def semanticDedup(base: DataFrame, tau: Double = 0.4, dim: Int = 64,
                     nPlanes: Int = 16, bands: Int = 4,
                     bucketCap: Int = 512): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     // materialize the two hot reused frames exactly once (see
     // [[lshSearch]]): (id, sv, nrm) feeds bandedSig + both verify
     // sides; the flood-filtered banded frame feeds both self-join
@@ -766,7 +755,6 @@ object Vectors {
                                tau: Double = 0.4, dim: Int = 64,
                                nPlanes: Int = 16, bands: Int = 4,
                                bucketCap: Int = 512): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val proj = graft.Engine.materialize(
       base.withColumn("is_new", isNew)
         .select(col("id"), col("sv"), col("nrm"), col("is_new")),
@@ -811,7 +799,6 @@ object Vectors {
     * that loses all members disappears (deterministically) rather
     * than being re-seeded. Returns (cluster_id, cvec, cnrm). */
   def kmeansFit(base: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val spark = base.sparkSession
     var cent = base.orderBy(col("id")).limit(k)
       .select(col("id"), col("sv"))
@@ -902,7 +889,6 @@ object Vectors {
     * Returns (id, sv, nrm, cluster, score). */
   def kmeansAssignIncremental(oldBase: DataFrame, newBatch: DataFrame,
                               kCells: Int = 8, iters: Int = 3): DataFrame = {
-    graft.functions.LongArrayDot.register(oldBase.sparkSession)
     val cent = kmeansFitShared(oldBase, kCells, iters)
     newBatch.crossJoin(broadcast(cent))
       .withColumn("score", expr("long_dot(sv, cvec)").cast("double") /
@@ -1173,7 +1159,6 @@ object Vectors {
   private def ivfPqParts(base: DataFrame, kCells: Int, cIters: Int,
                          m: Int, kCode: Int, pqIters: Int, dim: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val sw = dim / m
     val asg = kmeansAssign(base, kCells, cIters, nprobe = 1)
     val cent = kmeansFitShared(base, kCells, cIters)
@@ -1253,7 +1238,6 @@ object Vectors {
                   m: Int = 4, kCode: Int = 8, pqIters: Int = 2,
                   shortlist: Int = 8, nprobe: Int = 2,
                   dim: Int = 64): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val sw = dim / m
     val asg = kmeansAssign(base, kCells, cIters, nprobe)
     val cent = kmeansFitShared(base, kCells, cIters)
@@ -1332,7 +1316,6 @@ object Vectors {
     * Returns (cluster, rank_in_cluster, id, centrality). */
   def clusterSample(base: DataFrame, kCells: Int = 8, iters: Int = 3,
                     perCluster: Int = 20): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val asg = kmeansAssign(base, kCells, iters, nprobe = 1)
       .select(col("id"), col("cluster"), col("score"))
     val salted = asg
@@ -1366,7 +1349,6 @@ object Vectors {
                       queryFilter: org.apache.spark.sql.Column,
                       k: Int = 3, kCells: Int = 8,
                       iters: Int = 3, nprobe: Int = 1): DataFrame = {
-    graft.functions.LongArrayDot.register(base.sparkSession)
     val asg = kmeansAssign(base, kCells, iters, nprobe)
     val c = asg.filter(col("rn") === 1)
       .select(col("id").as("cand_id"), col("sv").as("cv"),

@@ -588,7 +588,6 @@ object WebQueries {
     "web_release" -> Q(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.Md5PrefixLong.register(s)
         val c = canonShared(s, dir)
           .select($"doc_id", $"url_canon", $"host", $"path_c", $"text")
         val wd = org.apache.spark.sql.expressions.Window

@@ -283,7 +283,8 @@ object AsOfJoinStrategy extends SparkStrategy {
   * the engine's portable time representation). `direction` is
   * `backward` (default) | `forward` | `nearest` — the same semantics
   * family as the window-form queries (`j_asof`, `j_asof_tol`,
-  * `j_asof_nearest`). */
+  * `j_asof_nearest`). The session must carry [[graft.GraftExtensions]],
+  * which plans the node. */
 object AsOf {
   val directions: Set[String] = Set("backward", "forward", "nearest")
 
@@ -293,15 +294,6 @@ object AsOf {
            tolerance: Option[Long] = None,
            direction: String = "backward"): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOfJoin
-    if (!spark.experimental.extraOptimizations.contains(PruneAsOfJoinColumns))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneAsOfJoinColumns
     val lPlan = leftDf.queryExecution.analyzed
     val rPlan0 = rightDf.queryExecution.analyzed
     // re-alias the right side when lineages overlap (self-join case) so

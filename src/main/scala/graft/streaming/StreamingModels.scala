@@ -66,7 +66,6 @@ object StreamingModels {
     * closes. Works on batch or streaming input (StreamingSpec asserts
     * parity). */
   def srmPartialsStream(events: DataFrame): DataFrame = {
-    graft.functions.Md5PrefixLong.register(events.sparkSession)
     events
       .withWatermark("ts", "1 day")
       // md5_prefix_long ≡ the conv(substring(md5)) idiom — per EVENT
@@ -118,8 +117,6 @@ object StreamingModels {
     * re-merge it with `hll_reg_merge`, no raw replay. Works on batch
     * or streaming input. */
   def hllPartialsStream(events: DataFrame): DataFrame = {
-    graft.functions.RegAgg.register(events.sparkSession)
-    graft.functions.Md5PrefixLong.register(events.sparkSession)
     events
       .withWatermark("ts", "1 day")
       // md5_prefix_long ≡ the conv(substring(md5)) idiom — per EVENT
@@ -142,7 +139,6 @@ object StreamingModels {
     * 2^(28-Mj) integer numerator. The 32-element folds run once per
     * (day, type) row — a bounded frame, not the hot path. */
   def hllFinalize(partials: DataFrame): DataFrame = {
-    graft.functions.RegAgg.register(partials.sparkSession)
     partials
       .groupBy(col("day_start"), col("event_type"))
       .agg(expr("hll_reg_merge(regs, 32)").as("regs"))
@@ -174,7 +170,6 @@ object StreamingModels {
     * w, q>>). Complete output mode — the partial IS the state. */
   def prioritySamplePartialsStream(docs: DataFrame, k: Int = 64)
       : DataFrame = {
-    graft.functions.TopKAgg.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("w"))
@@ -240,7 +235,6 @@ object StreamingModels {
     * finalize are O(days × k). */
   def kmeansAssignStream(newVecs: DataFrame, codebook: DataFrame)
       : DataFrame = {
-    graft.functions.LongArrayDot.register(newVecs.sparkSession)
     val cb = broadcast(codebook
       .select(col("cluster_id"), col("cvec"), col("cnrm")))
     newVecs
@@ -282,7 +276,6 @@ object StreamingModels {
     * to get idempotence and this one deliberately does not. */
   def kmeansDriftStream(newVecs: DataFrame, codebook: DataFrame)
       : DataFrame = {
-    graft.functions.LongArrayDot.register(newVecs.sparkSession)
     val cb = broadcast(codebook
       .agg(collect_list(struct(col("cluster_id"), col("cvec"),
         col("cnrm"))).as("cbs")))
@@ -441,7 +434,6 @@ object StreamingModels {
     * days × 192, watermark-evicted a day after each day closes.
     * Works on batch or streaming input (the spec asserts parity). */
   def cmsPartialsStream(events: DataFrame): DataFrame = {
-    graft.functions.Md5PrefixLong.register(events.sparkSession)
     events
       .withWatermark("ts", "1 day")
       .select(col("ts"),

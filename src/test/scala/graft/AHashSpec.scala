@@ -10,7 +10,6 @@ class AHashSpec extends SparkSuite {
   import spark.implicits._
 
   test("ahash64 equals the composed hex-fold form on sha256 bytes") {
-    graft.functions.AHash64.register(spark)
     val base = spark.range(500)
       .select($"id", hex(unhex(sha2(concat(lit("doc"), $"id"), 256)))
         .as("hh"))
@@ -36,7 +35,6 @@ class AHashSpec extends SparkSuite {
   }
 
   test("ahash64 is null on short inputs, never a partial hash") {
-    graft.functions.AHash64.register(spark)
     val r = Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("x")
       .select(expr("ahash64(x)")).head
     assert(r.isNullAt(0))

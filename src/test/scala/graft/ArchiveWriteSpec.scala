@@ -20,7 +20,6 @@ class ArchiveWriteSpec extends SparkSuite {
 
   private def archive(fn: String,
                       members: Seq[(String, Array[Byte])]): Array[Byte] = {
-    graft.functions.ArchiveWrite.register(spark)
     spark.range(1).select(entriesCol(members).as("e"))
       .selectExpr(s"$fn(e)").head.getAs[Array[Byte]](0)
   }
@@ -67,8 +66,6 @@ class ArchiveWriteSpec extends SparkSuite {
 
   test("zip_write -> our zip_list: every member method 8, CRC green, " +
     "exact byte sums") {
-    graft.functions.ZipList.register(spark)
-    graft.functions.ArchiveWrite.register(spark)
     val rows = spark.range(1).select(entriesCol(docs).as("e"))
       .select(posexplode(expr("zip_list(zip_write(e))"))
         .as(Seq("i", "m")))
@@ -86,8 +83,6 @@ class ArchiveWriteSpec extends SparkSuite {
   }
 
   test("zip_write of zero entries is a valid empty archive") {
-    graft.functions.ZipList.register(spark)
-    graft.functions.ArchiveWrite.register(spark)
     val b = spark.range(1).selectExpr(
       "zip_write(CAST(array() AS " +
         "ARRAY<STRUCT<name STRING, payload BINARY>>))")
@@ -101,7 +96,6 @@ class ArchiveWriteSpec extends SparkSuite {
   }
 
   test("zip_write null policy: null entry, name or payload -> NULL") {
-    graft.functions.ArchiveWrite.register(spark)
     val r = spark.range(1).selectExpr(
       "zip_write(array(struct(CAST(NULL AS STRING), X'00'))) AS a",
       "zip_write(array(struct('x', CAST(NULL AS BINARY)))) AS b",
@@ -142,7 +136,6 @@ class ArchiveWriteSpec extends SparkSuite {
       t.closeArchiveEntry()
     }
     t.close()
-    graft.functions.TarList.register(spark)
     val rows = spark.range(1).select(lit(bos.toByteArray).as("b"))
       .select(posexplode(expr("tar_list(b)")).as(Seq("i", "m")))
       .select($"m.name", $"m.size", $"m.cksum_ok", $"m.payload_sum")
@@ -158,8 +151,6 @@ class ArchiveWriteSpec extends SparkSuite {
 
   test("tar_write -> our tar_list: checksum recomputed green, " +
     "typeflag '0'") {
-    graft.functions.TarList.register(spark)
-    graft.functions.ArchiveWrite.register(spark)
     val rows = spark.range(1).select(entriesCol(docs).as("e"))
       .select(posexplode(expr("tar_list(tar_write(e))"))
         .as(Seq("i", "m")))
@@ -171,7 +162,6 @@ class ArchiveWriteSpec extends SparkSuite {
   }
 
   test("tar_write rejects names past the ustar 100-byte field") {
-    graft.functions.ArchiveWrite.register(spark)
     val long = "x" * 101
     val r = spark.range(1).selectExpr(
       s"tar_write(array(struct('$long', X'00')))").head

@@ -171,7 +171,6 @@ class AvroSpec extends SparkSuite {
   }
 
   test("SQL surface: avro_write per codec -> avro_read explode") {
-    graft.functions.AvroOcf.register(spark)
     import org.apache.spark.sql.functions._
     val rows = spark.sql(
       "SELECT posexplode(avro_read(avro_write(array(" +

@@ -14,7 +14,6 @@ class BpeMergeSpec extends SparkSuite {
     graft.operators.Corpus.mergeFoldExpr("bl", "br"))
 
   test("bpe_merge equals the composed fold on the real fit vocabulary") {
-    graft.functions.BpeMerge.register(spark)
     val docs = graft.sources.Sources.table(spark,
       "/root/testdata/sf0.001", "documents")
     val words = docs
@@ -36,7 +35,6 @@ class BpeMergeSpec extends SparkSuite {
   }
 
   test("bpe_merge matches the fold on hand-built edge shapes") {
-    graft.functions.BpeMerge.register(spark)
     // single symbol (no pairs), merge at head, merge at tail,
     // consecutive merge candidates (no re-merge within the pass),
     // bl occurring as a suffix of a longer symbol (must NOT merge),

@@ -13,7 +13,6 @@ class ByteFoldSpec extends SparkSuite {
     .select($"id", sha2(concat(lit("doc"), $"id"), 256).as("h"))
 
   test("mode 'sum' equals the composed conv(substr) window sums") {
-    graft.functions.ByteWindowFold.register(spark)
     val both = base
       .withColumn("native", expr("byte_window_fold(unhex(h), 8, 'sum')"))
       .withColumn("composed", expr("""transform(sequence(0, 3),
@@ -25,7 +24,6 @@ class ByteFoldSpec extends SparkSuite {
   }
 
   test("mode 'sqdev128' equals the composed energy fold") {
-    graft.functions.ByteWindowFold.register(spark)
     val both = base
       .withColumn("native",
         expr("byte_window_fold(unhex(h), 8, 'sqdev128')"))
@@ -38,7 +36,6 @@ class ByteFoldSpec extends SparkSuite {
   }
 
   test("trailing partial windows are ignored; bad mode fails analysis") {
-    graft.functions.ByteWindowFold.register(spark)
     val n = Seq(Tuple1(Array[Byte](1, 2, 3, 4, 5))).toDF("x")
       .select(size(expr("byte_window_fold(x, 2, 'sum')"))).head.getInt(0)
     assert(n === 2)

@@ -121,7 +121,6 @@ class Bzip2Spec extends SparkSuite {
   }
 
   test("SQL surface: bzip2_write/bzip2_read over a DataFrame column") {
-    Bzip2.register(spark)
     val df = Seq("one", "two two two two two", "", "päyload 中")
       .toDF("t")
       .withColumn("rt", expr(

@@ -140,8 +140,6 @@ class DeflateSpec extends SparkSuite {
   }
 
   test("SQL surface: gzip_write/gzip_members over a DataFrame column") {
-    Deflate.register(spark)
-    graft.functions.Gunzip.register(spark)
     val df = Seq("one", "two two two", "", "third payload")
       .toDF("t")
       .withColumn("rt", expr(

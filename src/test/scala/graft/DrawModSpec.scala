@@ -69,7 +69,6 @@ class DrawModSpec extends SparkSuite {
   }
 
   test("codegen and interpreted paths agree; nulls propagate") {
-    graft.functions.DrawMod64.register(spark)
     val df = spark.range(1000)
       .select($"id", expr("draw_mod64(id, id * 31 + 5, id % 4, 1000L)")
         .as("d"))
@@ -85,7 +84,6 @@ class DrawModSpec extends SparkSuite {
   }
 
   test("draws spread over the item space (no strings, still uniform-ish)") {
-    graft.functions.DrawMod64.register(spark)
     val n = 100L
     val counts = spark.range(20000)
       .select(expr(s"draw_mod64(id div 4, id div 2, id % 4, ${n}L)").as("d"))

@@ -416,7 +416,6 @@ class FlacSpec extends SparkSuite {
   }
 
   test("SQL surface: flac_decode over a DataFrame binary column") {
-    FlacDecode.register(spark)
     val s = walk(64, 100)
     val f = frame(Seq(s), 16, asn = 0, frameIdx = 0L, prm = 9)
     val b = stream(Seq(f), Seq(Array(s)), 44100, 16)

@@ -82,8 +82,6 @@ class FlacWriteSpec extends SparkSuite {
 
   test("SQL surface: flac_write -> flac_decode equals the in-plan " +
     "gate shape") {
-    graft.functions.FlacWrite.register(spark)
-    graft.functions.FlacDecode.register(spark)
     val r = spark.sql(
       "SELECT flac_decode(flac_write(CAST('hello flac' AS BINARY)))"
     ).head.getSeq[Long](0)

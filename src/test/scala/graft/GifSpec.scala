@@ -211,14 +211,12 @@ class GifSpec extends SparkSuite {
     val b = animated(fs, 10, 10, minCode = 2, gctBits = 1)
     assert(graft.functions.GifDecode.frames(b.take(b.length - 5)) == null)
     assert(graft.functions.GifDecode.frames(Array.emptyByteArray) == null)
-    graft.functions.GifDecode.register(spark)
     val viaSql = Seq(Tuple1(b.take(b.length - 5))).toDF("b")
       .select(expr("gif_frames(b)")).head
     assert(viaSql.isNullAt(0))
   }
 
   test("expression registers and matches the object decode in SQL") {
-    graft.functions.GifDecode.register(spark)
     val g = gif(px(7, 400, 4), 20, 20, minCode = 2, gctBits = 1)
     val viaSql = Seq(Tuple1(g)).toDF("b")
       .select(expr("gif_decode(b)")).head.getSeq[Long](0)

@@ -126,7 +126,6 @@ class GtfsRtSpec extends SparkSuite {
   }
 
   test("SQL surface: gtfsrt_write -> gtfsrt_decode round trip") {
-    graft.functions.GtfsRt.register(spark)
     val r = spark.sql(
       "SELECT inline(gtfsrt_decode(gtfsrt_write(named_struct(" +
         "'ts', 42L, 'entities', array(named_struct(" +

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.{KmvMin, TopKAgg}
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -15,8 +14,6 @@ class KmvMinSpec extends SparkSuite {
   import spark.implicits._
 
   private def hashed = {
-    KmvMin.register(spark)
-    TopKAgg.register(spark)
     Sources.table(spark, sf(), "events")
       // bucketed so heavy duplication exercises the distinct rule
       .withColumn("h", (round($"value" * 100).cast(LongType) % 50))
@@ -60,7 +57,6 @@ class KmvMinSpec extends SparkSuite {
   }
 
   test("kmv_min rejects a null k and a non-long input cleanly") {
-    KmvMin.register(spark)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       hashed.groupBy($"event_type")
         .agg(expr("kmv_min(h, CAST(NULL AS INT))"))

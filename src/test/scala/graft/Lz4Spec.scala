@@ -136,7 +136,6 @@ class Lz4Spec extends SparkSuite {
 
   test("SQL surface: lz4_write/lz4_read round trip and NULL " +
     "propagation") {
-    graft.functions.Lz4.register(spark)
     val r = spark.sql(
       "SELECT CAST(lz4_read(lz4_write(CAST('hello lz4' AS BINARY))) " +
         "AS STRING) AS t, lz4_read(X'00112233') AS bad").head

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.Md5PrefixLong
 import org.apache.spark.sql.functions._
 
 /** md5_prefix_long must be value-identical to the composed
@@ -11,7 +10,6 @@ class Md5PrefixSpec extends SparkSuite {
   import spark.implicits._
 
   test("md5_prefix_long equals the conv(substring(md5)) idiom") {
-    Md5PrefixLong.register(spark)
     val df = spark.range(0L, 10000L)
       .select(concat(lit("doc "), $"id".cast("string")).as("s"))
     val mismatches = df.select(
@@ -27,7 +25,6 @@ class Md5PrefixSpec extends SparkSuite {
   }
 
   test("md5_prefix_long is codegen'd and null-propagating") {
-    Md5PrefixLong.register(spark)
     val df = spark.range(0L, 10L).select($"id".cast("string").as("s"))
     val p = df.select(expr("md5_prefix_long(s, 14)"))
       .queryExecution.executedPlan.toString

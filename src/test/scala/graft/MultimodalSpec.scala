@@ -76,7 +76,6 @@ class MultimodalSpec extends SparkSuite {
     vm.unpersist()
   }
   test("wav_decode: real chunk walk — unknown chunks skipped, malformed rejected") {
-    graft.functions.WavDecode.register(spark)
     def le(v: Long, n: Int): Array[Byte] =
       (0 until n).map(k => ((v >> (8 * k)) & 0xff).toByte).toArray
     def chunk(id: String, body: Array[Byte]): Array[Byte] =
@@ -120,7 +119,6 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("bmp_decode: padded rows, bottom-up vs top-down, malformed rejected") {
-    graft.functions.BmpDecode.register(spark)
     def le(v: Long, n: Int): Array[Byte] =
       (0 until n).map(k => ((v >> (8 * k)) & 0xff).toByte).toArray
     // 2x2 24-bit BMP: stride 8 (2 pad bytes per row, set NONZERO to
@@ -155,7 +153,6 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("gunzip: real GZIPOutputStream bytes, header flags, corrupt rejects") {
-    graft.functions.Gunzip.register(spark)
     def dec(b: Array[Byte]): Option[Array[Byte]] = {
       val r = Seq(b).toDF("g").select(expr("gunzip(g)")).collect()(0)
       if (r.isNullAt(0)) None else Some(r.getAs[Array[Byte]](0))
@@ -206,7 +203,6 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("tar_list: multi-member walk, checksum verify, truncation, octal forms") {
-    graft.functions.TarList.register(spark)
     def member(name: String, payload: Array[Byte],
                spacePadOctal: Boolean = false): Array[Byte] = {
       val hdr = new Array[Byte](512)

@@ -88,7 +88,6 @@ class ParquetFooterSpec extends SparkSuite {
 
   test("SQL surface over binaryFile: footer fields line up with a " +
     "real count") {
-    graft.functions.ParquetFooter.register(spark)
     val (_, dir) = writeOne("zstd", 321)
     try {
       val r = spark.read.format("binaryFile")

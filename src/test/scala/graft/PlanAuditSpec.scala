@@ -63,8 +63,6 @@ class PlanAuditSpec extends SparkSuite {
     // copy through the exchange. The registered queries materialize
     // each round (the final plan reads checkpoint leaves), so the pin
     // audits the ROUND-BODY shape itself.
-    graft.functions.RegAgg.register(spark)
-    graft.functions.KmvMin.register(spark)
     val rows = Sources.table(spark, sf(), "events")
       .select($"user_id".as("node"),
         expr("array(CAST(event_id % 29 AS BIGINT), " +
@@ -275,7 +273,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("lshSearch derives its query side by semi-join, not a banded filter") {
-    graft.functions.LongArrayDot.register(spark)
     val base = graft.operators.Vectors.quantize(
       Sources.table(spark, sf(), "embeddings")).withColumn("id", $"vec_id")
     val p = plan(graft.operators.Vectors.lshSearch(base, $"label" === 3))
@@ -515,7 +512,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("long_dot participates in whole-stage codegen") {
-    graft.functions.LongArrayDot.register(spark)
     val df = Sources.table(spark, sf(), "lineitem")
       .select(array($"l_orderkey", $"l_partkey", $"l_suppkey").as("a"))
       .select(expr("long_dot(a, a)").as("n"))

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
 class PngWriteSpec extends SparkSuite {
 
   private def pngOf(w: Int, h: Int, px: Array[Byte]): Array[Byte] = {
-    graft.functions.PngWrite.register(spark)
     spark.range(1)
       .select(lit(px).as("p"))
       .selectExpr(s"png_write(${w}L, ${h}L, p)")
@@ -52,7 +51,6 @@ class PngWriteSpec extends SparkSuite {
 
   test("our png_decode reads ImageIO-written grayscale PNGs " +
     "(cross direction)") {
-    graft.functions.PngDecode.register(spark)
     images.foreach { case (w, h, px) =>
       val img = new java.awt.image.BufferedImage(w, h,
         java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
@@ -78,7 +76,6 @@ class PngWriteSpec extends SparkSuite {
 
   test("png_write -> our png_decode round trip (every chunk CRC " +
     "recomputed, real inflate)") {
-    graft.functions.PngDecode.register(spark)
     images.foreach { case (w, h, px) =>
       val d = spark.range(1).select(lit(pngOf(w, h, px)).as("b"))
         .selectExpr("png_decode(b)").head.getSeq[Long](0)
@@ -89,7 +86,6 @@ class PngWriteSpec extends SparkSuite {
   }
 
   test("shape mismatch and degenerate dims return NULL") {
-    graft.functions.PngWrite.register(spark)
     val r = spark.range(1).selectExpr(
       "png_write(3L, 2L, X'0102030405') AS a", // 5 != 6
       "png_write(0L, 1L, X'') AS b",

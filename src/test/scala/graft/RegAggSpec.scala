@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.RegAgg
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
@@ -16,7 +15,6 @@ class RegAggSpec extends SparkSuite {
   import spark.implicits._
 
   private def hashed = {
-    RegAgg.register(spark)
     Sources.table(spark, sf(), "events")
       .select($"event_type", $"user_id")
       .withColumn("h", expr("CAST(conv(substring(md5(" +
@@ -81,7 +79,6 @@ class RegAggSpec extends SparkSuite {
   }
 
   test("hll_reg_update rejects a null m with a clean analysis error") {
-    RegAgg.register(spark)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       hashed.groupBy($"event_type")
         .agg(expr("hll_reg_update(idx, rho, CAST(NULL AS INT))"))

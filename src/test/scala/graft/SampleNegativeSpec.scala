@@ -17,7 +17,6 @@ class SampleNegativeSpec extends SparkSuite {
 
   test("per-cust digest equals the digest of the row-level draw list") {
     val dir = sf()
-    graft.functions.DrawMod64.register(spark)
     def t(n: String) = graft.sources.Sources.table(spark, dir, n)
     val pos = t("lineitem")
       .join(t("orders"), col("l_orderkey") === col("o_orderkey"))

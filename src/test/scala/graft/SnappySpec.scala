@@ -62,7 +62,6 @@ class SnappySpec extends SparkSuite {
   }
 
   test("SQL surface: snappy_write/snappy_read round trip") {
-    graft.functions.SnappyRead.register(spark)
     val r = spark.sql(
       "SELECT CAST(snappy_read(snappy_write(" +
         "CAST('hello snappy' AS BINARY))) AS STRING) AS t").head

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs (one JVM-wide session via
-  * getOrCreate; configs align with the driver contract). */
+  * getOrCreate; configs align with Engine.localSession, GraftExtensions
+  * included). */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -12,6 +13,7 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .withExtensions(new GraftExtensions)
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"

@@ -218,7 +218,6 @@ class SqlSurfaceSpec extends SparkSuite {
     // epoch shuffle at NON-default epochs/shards (registered query
     // uses 2 epochs x 8 shards): the permutation law must hold at any
     // fan-out, and different epochs must genuinely reorder
-    graft.functions.Md5PrefixLong.register(spark)
     val sqlSh = spark.sql(
       "SELECT epoch, doc_id, shard, pos FROM corpus_shuffle(3, 4) " +
         "ORDER BY epoch, shard, pos").collect().map(_.toSeq)
@@ -254,7 +253,6 @@ class SqlSurfaceSpec extends SparkSuite {
     // HLL register cube at a NON-default grain (registered query uses
     // 7-day weeks): 3-day buckets must carry the same register sums
     // as a direct Scala aggregation at that grain
-    graft.functions.RegAgg.register(spark)
     val sqlHll = spark.sql(
       "SELECT bucket, event_type, n_exact, sum_regs, sum_inv " +
         "FROM hll_users_grain(3) ORDER BY bucket, event_type")

@@ -387,7 +387,6 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming drift stats: stateless argmax + O(k) state equals the per-vector re-aggregation") {
     import graft.operators.Vectors
-    graft.functions.LongArrayDot.register(spark)
     val all = Vectors.quantize(Sources.table(spark, sf(), "embeddings"))
       .withColumn("id", $"vec_id")
     val old = all.filter($"id" < 400)
@@ -643,7 +642,6 @@ class StreamingSpec extends SparkSuite {
       assert(got.except(batchPartials).count() === 0)
       // partials SUM-merge across days; point estimate = min over the
       // key's 3 row buckets; CMS one-sided bound: est >= exact
-      graft.functions.Md5PrefixLong.register(spark)
       val merged = got.groupBy($"r", $"bucket").agg(sum($"cnt").as("c"))
       val probes = batch
         .select(concat($"event_type", lit(":"), $"user_id").as("key"))

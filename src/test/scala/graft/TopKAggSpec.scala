@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TopKAgg
 import graft.sources.Sources
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +14,6 @@ class TopKAggSpec extends SparkSuite {
   import spark.implicits._
 
   private def events = {
-    TopKAgg.register(spark)
     Sources.table(spark, sf(), "events")
       .withColumn("cents", round($"value" * 100).cast(LongType))
       .select($"event_type", $"cents", $"event_id")
@@ -57,7 +55,6 @@ class TopKAggSpec extends SparkSuite {
   test("topk_min rejects a null k with a clean analysis error") {
     // CAST(NULL AS INT) is foldable but evaluates to null — must fail
     // the type check ("non-null literal"), not NPE during analysis.
-    TopKAgg.register(spark)
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       events.groupBy($"event_type")
         .agg(expr("topk_min(struct(cents, event_id), CAST(NULL AS INT))"))
@@ -73,7 +70,6 @@ class TopKAggSpec extends SparkSuite {
   }
 
   test("topk_min orders null struct fields first (Spark ascending default)") {
-    TopKAgg.register(spark)
     val rows = spark.sql("""
       SELECT topk_min(struct(v, id), 2) AS tk FROM VALUES
         (CAST(NULL AS BIGINT), 1L), (10L, 2L), (5L, 3L) AS t(v, id)""")
@@ -98,7 +94,6 @@ class TopKAggSpec extends SparkSuite {
   /** Heavily duplicated input: cents bucketed to 20 distinct values
     * per event_type so every heap sees many order-equal rows. */
   private def dupEvents = {
-    TopKAgg.register(spark)
     Sources.table(spark, sf(), "events")
       .withColumn("b", (round($"value" * 100).cast(LongType) % 20))
       .select($"event_type", $"b")

@@ -51,7 +51,6 @@ class Utf8Spec extends SparkSuite {
   }
 
   test("expression path: SQL call matches object stats; null stays null") {
-    graft.functions.Utf8Stats.register(spark)
     val r = Seq(Tuple1("héllo €")).toDF("t")
       .select(expr("utf8_stats(CAST(t AS BINARY))").as("u"))
       .select("u.n_bytes", "u.n_ascii", "u.n_2byte", "u.n_3byte",

@@ -177,7 +177,6 @@ class XzSpec extends SparkSuite {
 
   test("SQL surface: xz_write/xz_read round trip and NULL on " +
     "malformation") {
-    graft.functions.XzCodec.register(spark)
     val r = spark.sql(
       "SELECT CAST(xz_read(xz_write(CAST('hello xz' AS BINARY))) " +
         "AS STRING) AS t, xz_read(X'00112233') AS bad").head

@@ -57,7 +57,6 @@ class ZipPropertySpec extends SparkSuite {
   }
 
   test("random real archives round-trip: names, sizes, CRCs, byte sums") {
-    graft.functions.ZipList.register(spark)
     val cases = (0 until 40).flatMap { i =>
       archiveGen(Gen.Parameters.default, Seed(0x21700L + i))
     }

@@ -35,7 +35,6 @@ class ZipSpec extends SparkSuite {
   }
 
   private def walk(zips: Array[Byte]*) = {
-    graft.functions.ZipList.register(spark)
     zips.toSeq.map(Tuple1(_)).toDF("b")
       .select(posexplode(expr("zip_list(b)")).as(Seq("i", "m")))
       .select($"m.name", $"m.method", $"m.size", $"m.crc_ok",
@@ -101,7 +100,6 @@ class ZipSpec extends SparkSuite {
   }
 
   test("no EOCD → empty array; NULL → NULL; truncated payload flagged") {
-    graft.functions.ZipList.register(spark)
     val junk = Array.tabulate[Byte](64)(i => i.toByte)
     val n = Seq(Tuple1(junk)).toDF("b")
       .select(size(expr("zip_list(b)"))).head.getInt(0)
@@ -126,7 +124,6 @@ class ZipSpec extends SparkSuite {
   }
 
   test("zip_list on a non-binary input is rejected at analysis") {
-    graft.functions.ZipList.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT zip_list('not binary')").collect()
     }

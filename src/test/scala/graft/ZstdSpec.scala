@@ -190,7 +190,6 @@ class ZstdSpec extends SparkSuite {
 
   test("SQL surface: zstd_write/zstd_read round trip and NULL " +
     "on malformation") {
-    graft.functions.ZstdCodec.register(spark)
     val r = spark.sql(
       "SELECT CAST(zstd_read(zstd_write(CAST('hello zstd' AS " +
         "BINARY))) AS STRING) AS t, zstd_read(X'00112233') AS bad")
