@@ -878,30 +878,6 @@ object Engine {
 
   @volatile private var scratchRootOpt: Option[String] = None
 
-  /** Route ALL scratch I/O — shuffle local dirs, temporary streaming
-    * checkpoints (offsets + STATE STORE delta files: the per
-    * operator×partition×trigger commit tax), and [[sharedDir]] stream
-    * sources/sinks — onto a RAM-backed tmpfs when one is mounted.
-    * Call FIRST in a harness main, then pass the returned path as
-    * `spark.local.dir`; java.io.tmpdir is redirected here so Spark's
-    * `Utils.createTempDir` callers (temp checkpoints) land on it too.
-    *
-    * Why: on this bench host `/tmp` is plain disk while `/dev/shm` is
-    * a 126 GB tmpfs. The 18 stateful streaming drains fsync hundreds
-    * of tiny state/commit-log files per run through the checkpoint
-    * dir — on a contended disk that fixed cost dominates the drains
-    * and tracks HOST disk load, which is exactly the shape of the r15
-    * driver-side streaming elevation (22% of bench total, rotating
-    * per-query spikes at unchanged code). Scratch on tmpfs makes the
-    * fixed cost memory-speed and immune to other tenants' disk I/O.
-    * At 100 TB the analog is provisioned local NVMe for
-    * `spark.local.dir` and an object-store checkpoint dir sized for
-    * the state volume — the point stands: scratch placement is a
-    * first-class resource the harness pins, never inherited from
-    * wherever `/tmp` happens to mount. A/B lever:
-    * `SPARK_GRAFT_SCRATCH=disk` keeps the JVM defaults (the r16
-    * before/after measurement in PERF.md); an explicit path routes
-    * there instead of `/dev/shm`. */
   /** [[routeScratch]] applied to a session builder: routes scratch
     * and points `spark.local.dir` (shuffle/spill files) at it. */
   def withScratch(b: SparkSession.Builder): SparkSession.Builder =
@@ -925,6 +901,30 @@ object Engine {
     spark
   }
 
+  /** Route ALL scratch I/O — shuffle local dirs, temporary streaming
+    * checkpoints (offsets + STATE STORE delta files: the per
+    * operator×partition×trigger commit tax), and [[sharedDir]] stream
+    * sources/sinks — onto a RAM-backed tmpfs when one is mounted.
+    * Call FIRST in a harness main, then pass the returned path as
+    * `spark.local.dir`; java.io.tmpdir is redirected here so Spark's
+    * `Utils.createTempDir` callers (temp checkpoints) land on it too.
+    *
+    * Why: on the 4-vCPU bench VM `/tmp` is plain disk while `/dev/shm`
+    * is a tmpfs, and the stateful streaming drains create, chmod and
+    * rename hundreds of tiny state/commit-log files per run through the
+    * checkpoint dir. Those files are never fsync'd (an LD_PRELOAD
+    * counter of libc fsync/fdatasync saw no call during a drain); their
+    * fixed cost was Hadoop's per-file `chmod`/`readlink` process
+    * spawns, which [[graft.streaming.LocalCheckpointFs]] removes. tmpfs keeps the
+    * remaining metadata and page-cache writes off other tenants' disk
+    * I/O. At 100 TB the analog is provisioned local NVMe for
+    * `spark.local.dir` and an object-store checkpoint dir sized for
+    * the state volume — the point stands: scratch placement is a
+    * first-class resource the harness pins, never inherited from
+    * wherever `/tmp` happens to mount. A/B lever:
+    * `SPARK_GRAFT_SCRATCH=disk` keeps the JVM defaults (the r16
+    * before/after measurement in PERF.md); an explicit path routes
+    * there instead of `/dev/shm`. */
   def routeScratch(): Option[String] = {
     val pref = sys.env.get("SPARK_GRAFT_SCRATCH")
     if (pref.contains("disk")) None
@@ -960,19 +960,27 @@ object Engine {
     val p = if (p0.getParent != null && p0.getParent.getFileName != null &&
       p0.getParent.getFileName.toString.startsWith("graft_shared"))
       p0.getParent else p0
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      // close the walk stream (it holds a directory fd) — evictions
-      // and the shutdown hook would otherwise leak one handle per
-      // delete until GC (r13 ADVICE)
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(
-        java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala
-        .foreach(f => try java.nio.file.Files.deleteIfExists(f)
-          catch { case _: java.io.IOException => () })
-      finally walk.close()
+    // walkFileTree, not Files.walk: the scratch-root and sharedDir
+    // shutdown hooks (and Spark's own temp-dir hook) delete the same
+    // tree concurrently, and a Files.walk iterator throws
+    // UncheckedIOException(NoSuchFileException) on the first entry
+    // another hook removed, abandoning the rest of the walk. Here a
+    // vanished entry is skipped and its siblings are still deleted.
+    import java.nio.file.{FileVisitResult, Files, Path,
+      SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    def rm(f: Path): FileVisitResult = {
+      try Files.deleteIfExists(f)
+      catch { case _: java.io.IOException => () }
+      FileVisitResult.CONTINUE
     }
+    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+      override def visitFile(f: Path, a: BasicFileAttributes) = rm(f)
+      override def visitFileFailed(f: Path, e: java.io.IOException) =
+        FileVisitResult.CONTINUE
+      override def postVisitDirectory(d: Path, e: java.io.IOException) =
+        rm(d)
+    })
   }
 
   /** Get-or-build a shared on-disk directory for `token`: on a miss,

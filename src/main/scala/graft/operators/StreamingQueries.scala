@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Sources
-import graft.streaming.StreamingModels
+import graft.streaming.{LocalCheckpointFs, StreamingModels}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,21 +147,8 @@ object StreamingQueries {
     * joins/flatMapGroupsWithState, whose emissions are final. */
   private def drain(s: SparkSession, out: DataFrame, name: String,
                     mode: String = "complete"): DataFrame = {
-    val q = out.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      // q.stop() does NOT unload the query's state-store providers:
-      // they stay in the JVM-wide loaded-provider map with their
-      // in-heap loadedMaps, and the shared maintenance task keeps
-      // scanning them. Over a bench session running dozens of
-      // independent drains that is cross-query interference by
-      // construction — unload eagerly; the next streaming query
-      // restarts maintenance lazily. On a cluster the analog is
-      // per-query executor teardown, which does this for free.
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    }
+    LocalCheckpointFs.runToEnd(s)(out.writeStream.outputMode(mode)
+      .format("memory").queryName(name).start())
     s.table(name)
   }
 
@@ -696,14 +683,9 @@ object StreamingQueries {
             .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
             .select(to_date(col("window.start")).as("service_day_local"),
               col("event_type"), col("n"), col("cents"))
-          val q = StreamingModels.sinkByServiceDay(agg,
-            d + "/tbl", d + "/ckpt",
-            mergeKeys = Seq("service_day_local", "event_type")).start()
-          try q.processAllAvailable()
-          finally {
-            q.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
+          LocalCheckpointFs.runToEnd(s)(StreamingModels.sinkByServiceDay(
+            agg, d + "/tbl", d + "/ckpt",
+            mergeKeys = Seq("service_day_local", "event_type")).start())
         }
         s.read.parquet(root + "/tbl")
           .select(col("service_day_local").cast("string")
@@ -1164,12 +1146,7 @@ object StreamingQueries {
             .writeStream.outputMode("append").format("parquet")
             .option("path", outD).option("checkpointLocation", ckpt)
             .start()
-          val q1 = job()
-          try q1.processAllAvailable()
-          finally {
-            q1.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
+          LocalCheckpointFs.runToEnd(s)(job())
           // phase B: the rest + the far-future sentinel, moved into
           // the source dir with later mtimes (the replay-source move)
           val sent = ev.sparkSession.range(1).select(
@@ -1189,12 +1166,8 @@ object StreamingQueries {
           new java.io.File(srcD + "__b").listFiles()
             .foreach(_.delete())
           new java.io.File(srcD + "__b").delete()
-          val q2 = job() // SAME checkpoint: offsets + state + watermark
-          try q2.processAllAvailable()
-          finally {
-            q2.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
+          // SAME checkpoint: offsets + state + watermark
+          LocalCheckpointFs.runToEnd(s)(job())
         }
         s.read.parquet(root + "/out")
           .filter(col("event_type") =!= "sentinel")

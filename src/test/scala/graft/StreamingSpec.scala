@@ -808,4 +808,33 @@ class StreamingSpec extends SparkSuite {
     assert(streamed.distinct().count() === base,
       "replays must be byte-identical copies")
   }
+
+  test("LocalCheckpointFs.runToEnd restores the filesystem key even when the query throws") {
+    import graft.streaming.LocalCheckpointFs
+    implicit val sqlCtx = spark.sqlContext
+    val key = LocalCheckpointFs.ImplKey
+    val stockImpl = spark.sessionState.newHadoopConf().get(key)
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    in.addData(1L, 2L)
+    val boom = udf { (x: Long) =>
+      if (x > 0) throw new IllegalStateException("boom") else x }
+    var during: String = null
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      LocalCheckpointFs.runToEnd(spark) {
+        during = spark.sessionState.newHadoopConf().get(key)
+        in.toDS().select(boom($"value")).writeStream
+          .format("memory").queryName("ckptfs_boom").start()
+      }
+    }
+    assert(during === classOf[LocalCheckpointFs].getName)
+    assert(spark.conf.getOption(key) === None)
+    assert(spark.sessionState.newHadoopConf().get(key) === stockImpl)
+    // a value set before the helper comes back, also when start throws
+    spark.conf.set(key, stockImpl)
+    try {
+      intercept[IllegalStateException](LocalCheckpointFs.runToEnd(spark)(
+        throw new IllegalStateException("no start")))
+      assert(spark.conf.getOption(key) === Some(stockImpl))
+    } finally spark.conf.unset(key)
+  }
 }
