@@ -29,16 +29,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.localSession(defaultCpus = 4)
-    // opt-in alternate materialization configs so the reuse story has
-    // measured numbers (PERF.md), not claims: SPARK_GRAFT_MAT_MODE
-    // (local|table), SPARK_GRAFT_REUSE=1 (cross-run table reuse),
-    // SPARK_GRAFT_SHARE=0 (disable in-session shared frames).
-    sys.env.get("SPARK_GRAFT_MAT_MODE")
-      .foreach(spark.conf.set("graft.materialize.mode", _))
-    if (sys.env.get("SPARK_GRAFT_REUSE").contains("1"))
-      spark.conf.set("graft.materialize.reuse", "true")
-    if (sys.env.get("SPARK_GRAFT_SHARE").contains("0"))
-      spark.conf.set("graft.materialize.share", "false")
 
     // warmup: touch every source table + run one small aggregation
     graft.sources.Sources.testTables.foreach { t =>
@@ -139,13 +129,9 @@ object Bench {
         }
       }
       val gcDelta = gcMs() - gc0
-      // bound the shared-frame registry: advance the idle clock and
-      // drop frames no query touched in the last 25 (families are
-      // name-adjacent, so riders stay warm); then release the evicted
-      // checkpoint blocks with the stale sweep below
-      Engine.tickShared()
-      Engine.evictSharedIdle(25)
-      Engine.unpersistStale(spark)
+      // age out idle shared artifacts and release dead checkpoint
+      // blocks (families are name-adjacent, so riders stay warm)
+      Engine.endQuery(spark)
       // force a GC outside the timers: at 130 queries the async
       // ContextCleaner/codegen-cache churn otherwise accumulates and
       // inflates LATER queries' minimums (measured: corpus_clean

@@ -656,10 +656,6 @@ object Engine {
                   buckets: Int = 32): DataFrame =
     materializeTracked(df, key, name, buckets)._1
 
-  /** [[materialize]] variant that also returns the backing table name
-    * in table mode (`None` in local mode) so iterative callers — e.g.
-    * connectedComponents' per-round labels — can drop a superseded
-    * round's table instead of leaking one table per iteration. */
   /** Stable 8-byte identity token for (application, logical plan,
     * leaf data). Canonicalization normalizes exprIds (two
     * logically-identical frames built separately map to the same
@@ -724,6 +720,10 @@ object Engine {
     }
   }
 
+  /** [[materialize]] variant that also returns the backing table name
+    * in table mode (`None` in local mode) so iterative callers — e.g.
+    * connectedComponents' per-round labels — can drop a superseded
+    * round's table instead of leaking one table per iteration. */
   def materializeTracked(df: DataFrame, key: String, name: String,
                          buckets: Int = 32): (DataFrame, Option[String]) = {
     val spark = df.sparkSession
@@ -734,77 +734,102 @@ object Engine {
       // canonicalized.toString nulls out scan paths and table
       // identity — without the leaf ids, the same query shape over
       // two data dirs would silently share one table
-      val token = planToken(df)
-      val table = s"graft_mat_${name}_$token"
-      // opt-in cross-query reuse: with `graft.materialize.reuse=true`,
-      // a table that already exists for this exact (plan, data) token
-      // is returned WITHOUT recomputing — e.g. the n-gram index that
-      // both the jaccard and containment queries build. Safe exactly
-      // when sources are immutable for the session (the 100 TB corpus
-      // case); if files are rewritten IN PLACE under unchanged paths,
-      // the token cannot see it — leave the default (always rebuild,
-      // dbt semantics) for mutable sources. The exists-check and the
-      // read are not atomic: reuse assumes a SINGLE writer per token
-      // (one driver per application — the token embeds the app id, so
-      // cross-application races cannot occur; concurrent same-app
-      // threads should share via [[materializeShared]] instead).
-      val reuse = spark.conf
-        .getOption("graft.materialize.reuse").contains("true")
-      if (!(reuse && spark.catalog.tableExists(table))) {
-        df.write.mode("overwrite")
-          .bucketBy(buckets, key).sortBy(key)
-          .format("parquet").saveAsTable(table)
-      }
+      val table = s"graft_mat_${name}_${planToken(df)}"
+      df.write.mode("overwrite")
+        .bucketBy(buckets, key).sortBy(key)
+        .format("parquet").saveAsTable(table)
       (spark.table(table), Some(table))
     }
   }
 
-  private val sharedFrames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // ── the SHARED-ARTIFACT registry: every [[materializeShared]] frame
+  // and [[sharedDir]] directory lives in this one map, keyed by kind +
+  // token so a frame and a dir can never collide. Each entry carries
+  // its value, the idle tick it was last used at, and its release
+  // action (none for a frame — [[unpersistStale]] frees its blocks
+  // once it leaves the map; delete-from-disk for a directory, which
+  // nothing holds open between queries: streams drain before their fn
+  // returns). Lookup, stamping, aging, rollback and release all go
+  // through here.
+  private final class Shared(val value: AnyRef, val release: () => Unit,
+                             @volatile var lastUse: Long)
 
-  // idle accounting for [[evictSharedIdle]]: a logical clock the
-  // harness advances once per query; every cache hit/build stamps the
-  // token. Purely advisory — eviction is safe at any time (a later
-  // consumer just rebuilds on miss).
+  private val shared =
+    new java.util.concurrent.ConcurrentHashMap[String, Shared]()
+
+  // idle clock: advanced once per query by [[endQuery]]; every hit or
+  // build stamps its entry. Purely advisory — eviction is safe at any
+  // time (a later consumer just rebuilds on miss).
   private val sharedTick = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val sharedLastUse =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Advance the shared-frame idle clock (call once per query). */
-  def tickShared(): Unit = sharedTick.incrementAndGet()
+  // a directory entry still in the map at JVM exit is deleted
+  Runtime.getRuntime.addShutdownHook(new Thread(() => clearShared()))
 
-  /** Evict every [[materializeShared]] entry not used in the last
-    * `maxIdle` ticks, returning how many were dropped. Bounds the
-    * registry at any query count: without it a long session pins one
-    * localCheckpoint per shared frame for the JVM lifetime (341 MB at
-    * 167 queries / sf0.1 — GBs at larger SFs), and the storage-memory
-    * pressure is exactly the late-query slowdown class
-    * [[unpersistStale]] exists for. Queries run in sorted name order,
-    * so a family's builder and riders are adjacent — a window of ~25
-    * keeps every measured rider relationship alive. Follow with
-    * [[unpersistStale]] to release the evicted frames' blocks. */
-  def evictSharedIdle(maxIdle: Long): Int = {
-    import scala.jdk.CollectionConverters._
-    val now = sharedTick.get
-    def idle(t: String): Boolean =
-      now - Option(sharedLastUse.get(t)).fold(0L)(_.longValue) > maxIdle
-    // snapshot BOTH dead lists before mutating sharedLastUse: a token
-    // present in both registries (nothing enforces the namespaces stay
-    // disjoint) would otherwise read as never-used for the second
-    // registry once the first pass removed its last-use entry, and a
-    // just-touched directory could be deleted (r13 ADVICE)
-    val dead = sharedFrames.keySet.asScala.filter(idle).toSeq
-    val deadDirs = sharedPaths.keySet.asScala.filter(idle).toSeq
-    dead.foreach { t => sharedFrames.remove(t); sharedLastUse.remove(t) }
-    // same aging for shared DIRECTORIES (stream-source dirs): evicted
-    // paths are deleted from disk — nothing holds an open handle
-    // between queries (streams drain before their fn returns)
-    deadDirs.foreach { t => evictSharedPath(t); sharedLastUse.remove(t) }
-    dead.size + deadDirs.size
+  /** Get-or-build for the registry. A hit counts only while `live`
+    * holds for its value (a directory must still exist on disk).
+    *
+    * Builds run OUTSIDE the map lock (get → build → compare-and-set),
+    * NOT via `computeIfAbsent`: shared builds nest — `spanDedup`'s
+    * build rides the shared span-windows frame, `bpeSegments`' rides
+    * the shared fit — and a nested `computeIfAbsent` on one
+    * ConcurrentHashMap throws IllegalStateException("Recursive
+    * update") whenever the two tokens land in the same bin. Tokens
+    * embed the per-run application id, so the collision is
+    * probabilistic PER JVM — it surfaced as a whole-run flaky failure
+    * of the span-dedup family. The trade: two concurrent first
+    * callers may both build; the loser releases its own artifact at
+    * once and returns the winner's, which is benign — callers here
+    * are single-threaded harness mains. A build that throws registers
+    * nothing (`build` cleans up after itself). */
+  private def sharedGetOrBuild[A <: AnyRef](key: String, live: A => Boolean)
+                                           (build: => (A, () => Unit)): A = {
+    val hit = shared.get(key)
+    if (hit != null && live(hit.value.asInstanceOf[A])) {
+      hit.lastUse = sharedTick.get
+      hit.value.asInstanceOf[A]
+    } else {
+      val (value, release) = build
+      val mine = new Shared(value, release, sharedTick.get)
+      // replace only a missing or stale entry, never a live one that a
+      // concurrent build registered first
+      val kept = shared.merge(key, mine,
+        (cur, m) => if (cur eq hit) m else cur)
+      if (kept ne mine) release()
+      else if (hit != null) hit.release()
+      kept.value.asInstanceOf[A]
+    }
   }
 
-  /** Session-scoped SHARED materialization — the in-memory sibling of
-    * the `graft.materialize.reuse` knob, for a frame that several
+  /** Remove and release every entry matching `drop`. */
+  private def evictShared(drop: (String, Shared) => Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    shared.asScala.filter { case (k, e) => drop(k, e) }.toSeq
+      .foreach { case (k, e) => if (shared.remove(k, e)) e.release() }
+  }
+
+  /** Idle window: an entry untouched for this many [[endQuery]] calls
+    * is evicted. Bounds the registry at any query count: without it a
+    * long session pins one localCheckpoint per shared frame for the
+    * JVM lifetime (341 MB at 167 queries / sf0.1 — GBs at larger SFs),
+    * and the storage-memory pressure is exactly the late-query
+    * slowdown class [[unpersistStale]] exists for. Queries run in
+    * sorted name order, so a family's builder and riders are adjacent
+    * — a window of ~25 keeps every measured rider relationship
+    * alive. */
+  private val SharedIdleWindow = 25L
+
+  /** End-of-query step for a session running many queries back to back
+    * (Bench, Verify): advance the idle clock, evict shared artifacts
+    * idle for [[SharedIdleWindow]] queries, then release every dead
+    * checkpoint block ([[unpersistStale]]). Call after each query,
+    * once every consumer of its frames has run. */
+  def endQuery(spark: SparkSession): Unit = {
+    val now = sharedTick.incrementAndGet()
+    evictShared((_, e) => now - e.lastUse > SharedIdleWindow)
+    unpersistStale(spark)
+  }
+
+  /** Session-scoped SHARED materialization, for a frame that several
     * registered queries build identically (e.g. the n-gram scored-pairs
     * frame behind both the jaccard and containment dedups: without
     * sharing, each query rebuilds the same multi-million-row inverted
@@ -817,64 +842,21 @@ object Engine {
     * its own token would never hit the cache. `df` is by-name and only
     * evaluated on a miss.
     *
-    * Builds run OUTSIDE the map lock (get → build → putIfAbsent), NOT
-    * via `computeIfAbsent`: shared builds nest — `spanDedup`'s build
-    * rides the shared span-windows frame, `bpeSegments`' rides the
-    * shared fit — and a nested `computeIfAbsent` on one
-    * ConcurrentHashMap throws IllegalStateException("Recursive
-    * update") whenever the two tokens land in the same bin. Tokens
-    * embed the per-run application id, so the collision is
-    * probabilistic PER JVM — it surfaced as a whole-run flaky failure
-    * of the span-dedup family. The trade: two concurrent first
-    * callers may both build (last-listed discards its copy; the
-    * winner's entry is returned), which is benign — callers here are
-    * single-threaded harness mains.
-    *
-    * Correct exactly when sources are immutable for the session (the
-    * reuse-knob caveat); tokens embed the application id, so entries
-    * from other sessions in the same JVM can never be returned (they
-    * only age out — call [[clearShared]] for test hygiene). Disable
-    * per-session with `graft.materialize.share=false` (every call then
-    * materializes fresh, dbt semantics). */
+    * Correct exactly when sources are immutable for the session;
+    * tokens embed the application id, so entries from other sessions
+    * in the same JVM can never be returned (they only age out — call
+    * [[clearShared]] for test hygiene). */
   def materializeShared(spark: SparkSession, token: String,
                         df: => DataFrame, key: String,
-                        name: String): DataFrame = {
-    val share = !spark.conf.getOption("graft.materialize.share")
-      .contains("false")
-    if (!share) materialize(df, key, name)
-    else {
-      sharedLastUse.put(token, sharedTick.get)
-      val hit = sharedFrames.get(token)
-      if (hit != null) hit
-      else {
-        val built = materialize(df, key, name)
-        val raced = sharedFrames.putIfAbsent(token, built)
-        if (raced != null) raced else built
-      }
+                        name: String): DataFrame =
+    sharedGetOrBuild[DataFrame]("frame:" + token, _ => true) {
+      (materialize(df, key, name), () => ())
     }
-  }
 
-  /** Drop every cached [[materializeShared]] frame (test hygiene —
-    * entries are per-application-id and otherwise live for the JVM). */
-  def clearShared(): Unit = { sharedFrames.clear(); clearSharedPaths() }
-
-  // ── shared MATERIALIZED DIRECTORIES (the on-disk sibling of
-  // sharedFrames): a path several queries read identically — e.g. the
-  // streaming twins' 4-file parquet stream-source dirs, which
-  // otherwise get rewritten per query (and per bench sample) from the
-  // same table projection. Same discipline as sharedFrames: tokens
-  // derive from planToken of the INPUT frame, Bench's
-  // snapshot/rollback applies (sharedKeys/retainShared cover both
-  // registries), and eviction DELETES the directory — nothing holds
-  // an open handle between queries (streams are drained before fn
-  // returns). Every dir ever created is also removed by a JVM
-  // shutdown hook, closing the r12 ADVICE /tmp-accumulation leak.
-  private val sharedPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val allSharedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val shutdownHookArmed =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Evict every shared artifact (test hygiene — entries are
+    * per-application-id and otherwise live for the JVM); evicted
+    * directories are deleted from disk. */
+  def clearShared(): Unit = evictShared((_, _) => true)
 
   @volatile private var scratchRootOpt: Option[String] = None
 
@@ -983,67 +965,38 @@ object Engine {
     })
   }
 
-  /** Get-or-build a shared on-disk directory for `token`: on a miss,
-    * a fresh temp dir is created, `build(dir)` writes it, and the
-    * path is registered under the same snapshot/rollback/idle
-    * lifecycle as [[materializeShared]] frames. Honors
-    * `graft.materialize.share=false` (always builds fresh; the dir is
-    * still shutdown-cleaned). */
+  /** Get-or-build a shared on-disk directory for `token` — a path
+    * several queries read identically, e.g. the streaming twins'
+    * parquet stream-source dirs, which would otherwise be rewritten per
+    * query (and per bench sample) from the same table projection. On a
+    * miss a fresh temp dir is created and `build(dir)` writes it; a
+    * hit counts only while the dir still exists. The dir shares the
+    * frames' snapshot/rollback/idle lifecycle; eviction deletes it,
+    * and so does a build that throws. */
   def sharedDir(spark: SparkSession, token: String)
-               (build: String => Unit): String = {
-    if (shutdownHookArmed.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        allSharedDirs.asScala.foreach(deleteDir)
-      }))
-    def fresh(): String = {
+               (build: String => Unit): String =
+    sharedGetOrBuild[String]("dir:" + token,
+        d => java.nio.file.Files.exists(java.nio.file.Paths.get(d))) {
       // under the routed scratch root when [[routeScratch]] ran (the
       // nio TempFileHelper caches java.io.tmpdir at class load, so the
       // root is passed explicitly rather than trusted to the property)
-      val tmpRoot = scratchRootOpt
-        .map(r => java.nio.file.Paths.get(r))
-        .getOrElse(java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir")))
+      val tmpRoot = java.nio.file.Paths.get(
+        scratchRootOpt.getOrElse(System.getProperty("java.io.tmpdir")))
       val dir = java.nio.file.Files.createDirectories(
         java.nio.file.Files.createTempDirectory(tmpRoot, "graft_shared")
           .resolve("d")).toString
-      allSharedDirs.add(dir)
-      build(dir)
-      dir
+      try build(dir)
+      catch { case e: Throwable => deleteDir(dir); throw e }
+      (dir, () => deleteDir(dir))
     }
-    val share = !spark.conf.getOption("graft.materialize.share")
-      .contains("false")
-    if (!share) fresh()
-    else {
-      sharedLastUse.put(token, sharedTick.get)
-      val hit = sharedPaths.get(token)
-      if (hit != null && java.nio.file.Files.exists(
-          java.nio.file.Paths.get(hit))) hit
-      else {
-        val built = fresh()
-        val raced = sharedPaths.putIfAbsent(token, built)
-        if (raced != null) { deleteDir(built); allSharedDirs.remove(built)
-          raced } else built
-      }
-    }
-  }
 
-  private def evictSharedPath(token: String): Unit = {
-    val dir = sharedPaths.remove(token)
-    if (dir != null) { deleteDir(dir); allSharedDirs.remove(dir) }
-  }
-
-  private def clearSharedPaths(): Unit = {
-    import scala.jdk.CollectionConverters._
-    sharedPaths.keySet.asScala.toSeq.foreach(evictSharedPath)
-  }
-
-  /** Snapshot of the current [[materializeShared]] / [[sharedDir]]
-    * keys — pair with [[retainShared]] to roll back entries added by
-    * a benchmark sample. */
+  /** Snapshot of the current shared-artifact keys, one per live
+    * [[materializeShared]] frame or [[sharedDir]] directory — pair
+    * with [[retainShared]] to roll back entries added by a benchmark
+    * sample. */
   def sharedKeys(): Set[String] = {
     import scala.jdk.CollectionConverters._
-    sharedFrames.keySet.asScala.toSet ++ sharedPaths.keySet.asScala.toSet
+    shared.keySet.asScala.toSet
   }
 
   /** Evict every [[materializeShared]] / [[sharedDir]] entry whose
@@ -1054,11 +1007,8 @@ object Engine {
     * first sample), while queries that merely REUSE a frame built by
     * an earlier query keep riding it — per-query times then compose
     * into an honest pipeline total. */
-  def retainShared(keep: Set[String]): Unit = {
-    import scala.jdk.CollectionConverters._
-    sharedFrames.keySet.asScala.filterNot(keep).foreach(sharedFrames.remove)
-    sharedPaths.keySet.asScala.filterNot(keep).toSeq.foreach(evictSharedPath)
-  }
+  def retainShared(keep: Set[String]): Unit =
+    evictShared((k, _) => !keep(k))
 
   /** RDD ids whose blocks back a LIVE [[materializeShared]] frame.
     * A localCheckpoint's lineage is truncated, so unpersisting its
@@ -1066,10 +1016,12 @@ object Engine {
     * survive a [[unpersistStale]] sweep. */
   private def liveSharedRddIds(): Set[Int] = {
     import scala.jdk.CollectionConverters._
-    sharedFrames.values.asScala.flatMap { df =>
-      df.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }
+    shared.values.asScala.map(_.value).flatMap {
+      case ds: org.apache.spark.sql.Dataset[_] =>
+        ds.queryExecution.analyzed.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        }
+      case _ => Nil
     }.toSet
   }
 

@@ -11,7 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Engine.localSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
-    // sorted name order, like Bench: evictSharedIdle's window premise
+    // sorted name order, like Bench: Engine.endQuery's idle-window premise
     // is that a family's builder and riders are name-adjacent —
     // hash-map order would scatter them and evict frames mid-family
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -26,11 +26,7 @@ object Verify {
       // survive a 25-query idle window, then age out) — 96 queries of
       // accumulated localCheckpoints otherwise pressure the heap for
       // the whole run
-      finally {
-        Engine.tickShared()
-        Engine.evictSharedIdle(25)
-        Engine.unpersistStale(spark)
-      }
+      finally Engine.endQuery(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

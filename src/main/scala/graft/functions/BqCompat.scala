@@ -36,8 +36,6 @@ object BqCompat {
     * independent of spark.sql.ansi.enabled. */
   def safeCastLong(c: Column): Column = c.try_cast(LongType)
 
-  def safeCastDouble(c: Column): Column = c.try_cast(DoubleType)
-
   /** BigQuery SAFE_DIVIDE: NULL on divide-by-zero. */
   def safeDivide(a: Column, b: Column): Column = try_divide(a, b)
 

@@ -46,7 +46,11 @@ object SnappyRead {
       shift += 7
       if ((v & 0x80) == 0) done = true
     }
-    if (declared > Int.MaxValue.toLong) return null
+    // the format's largest expansion is a 3-byte copy emitting 64
+    // bytes, so no valid stream declares more than 22x its remaining
+    // bytes: reject before allocating the declared length
+    if (declared > Int.MaxValue.toLong || declared > 22L * (b.length - p))
+      return null
     val n = declared.toInt
     val out = new Array[Byte](n)
     var d = 0

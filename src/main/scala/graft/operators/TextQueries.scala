@@ -178,10 +178,6 @@ object TextQueries {
           .as("n_spanning"))
   }
 
-  /** 56-bit token hash from the md5 hex prefix (portable). */
-  private def tokHash(c: Column): Column =
-    conv(substring(md5(c), 1, 14), 16, 10).cast(LongType)
-
   private val DUCK_TOKHASH = "('0x' || substr(md5(%s), 1, 14))::BIGINT"
 
   // stopword sets for the language-ID heuristic

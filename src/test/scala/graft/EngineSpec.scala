@@ -206,20 +206,55 @@ class EngineSpec extends SparkSuite {
     val d2 = build("es_tok_a")
     assert(builds === 2 && d2 != d1 &&
       new java.io.File(d2, "x.txt").exists())
-    // share=false: always a fresh dir, never registered — with share
-    // back on, the token must still resolve to d2, proving the
-    // share=false build did not leak a registry entry (r13 ADVICE:
-    // assert the non-registration, not an unused token)
-    spark.conf.set("graft.materialize.share", "false")
-    val d3 = try {
-      val d = build("es_tok_a")
-      assert(builds === 3 && d != d2)
-      d
-    } finally spark.conf.unset("graft.materialize.share")
-    assert(build("es_tok_a") === d2 && builds === 3,
-      "share=false must not have replaced or registered the shared entry")
-    assert(d3 != d2)
+    // a registered dir deleted from disk behind the registry is a miss:
+    // the token rebuilds into a live dir instead of returning the
+    // vanished path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(d2, "x.txt"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(d2))
+    val d3 = build("es_tok_a")
+    assert(builds === 3 && new java.io.File(d3, "x.txt").exists())
+    assert(build("es_tok_a") === d3 && builds === 3)
     Engine.retainShared(snap)
+  }
+
+  test("a sharedDir build that throws leaves no dir and no registry key") {
+    Engine.clearShared()
+    var made: String = null
+    val e = intercept[IllegalStateException] {
+      Engine.sharedDir(spark, "es_tok_fail") { d =>
+        made = d
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, "x.txt"),
+          "1".getBytes)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(e.getMessage === "build failed")
+    assert(made != null && !new java.io.File(made).exists(),
+      "a failed build must delete its own directory at once")
+    assert(!new java.io.File(made).getParentFile.exists(),
+      "the graft_shared temp root must go too")
+    assert(Engine.sharedKeys().isEmpty,
+      s"a failed build registered: ${Engine.sharedKeys()}")
+  }
+
+  test("a frame and a dir under one token string are independent entries") {
+    Engine.clearShared()
+    try {
+      val tok = "es_tok_both"
+      val frame = Engine.materializeShared(spark, tok,
+        Seq(1L, 2L, 3L).toDF("k"), key = "k", name = "both_frame")
+      val dir = Engine.sharedDir(spark, tok) { d =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, "x.txt"),
+          "1".getBytes)
+      }
+      assert(Engine.sharedKeys().size === 2,
+        s"one key per artifact: ${Engine.sharedKeys()}")
+      // each kind hits its own entry, without a rebuild
+      assert(Engine.sharedDir(spark, tok)(_ => fail("dir rebuilt")) === dir)
+      assert(Engine.materializeShared(spark, tok,
+        fail("frame rebuilt"), key = "k", name = "both_frame") eq frame)
+      assert(frame.count() === 3 && new java.io.File(dir, "x.txt").exists())
+    } finally Engine.clearShared()
   }
 
   test("refreshByServiceDay rewrites only the delta's day partitions") {
@@ -520,38 +555,6 @@ class EngineSpec extends SparkSuite {
     } finally {
       spark.conf.unset("graft.materialize.mode")
       purgeMatTables("graft_mat_tok_stable")
-    }
-  }
-
-  test("materialize.reuse=true skips recompute for an existing token table") {
-    purgeMatTables("graft_mat_reuse_check")
-    spark.conf.set("graft.materialize.mode", "table")
-    try {
-      def build() = graft.sources.Sources.table(spark, sf(), "region")
-        .select($"r_regionkey".as("k"), $"r_name")
-      val firstCount = Engine.materialize(build(), key = "k",
-        name = "reuse_check", buckets = 2).count()
-      val table = spark.catalog.listTables().collect().map(_.name)
-        .find(_.startsWith("graft_mat_reuse_check")).get
-      // replace the backing table's rows out-of-band so reuse vs
-      // rebuild is observable
-      spark.sql(s"INSERT OVERWRITE TABLE `$table` SELECT -1, 'MARKER'")
-      spark.conf.set("graft.materialize.reuse", "true")
-      val reused = Engine.materialize(build(), key = "k",
-        name = "reuse_check", buckets = 2)
-      assert(reused.count() === 1 &&
-        reused.select($"r_name").as[String].head() === "MARKER",
-        "reuse=true must return the existing table untouched")
-      // default semantics: rebuild overwrites the marker
-      spark.conf.unset("graft.materialize.reuse")
-      val rebuilt = Engine.materialize(build(), key = "k",
-        name = "reuse_check", buckets = 2)
-      assert(rebuilt.count() === firstCount && firstCount > 1,
-        "default must rebuild the table from the plan")
-    } finally {
-      spark.conf.unset("graft.materialize.reuse")
-      spark.conf.unset("graft.materialize.mode")
-      purgeMatTables("graft_mat_reuse_check")
     }
   }
 

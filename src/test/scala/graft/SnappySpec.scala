@@ -59,6 +59,18 @@ class SnappySpec extends SparkSuite {
       "unterminated varint")
     // empty blob: no varint at all
     assert(SnappyRead.read(Array.empty[Byte]) == null, "empty blob")
+    // header only, declaring 64 MiB: rejected before the output
+    // buffer is allocated (no element can expand past 22x its bytes)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val a0 = mx.getThreadAllocatedBytes(tid)
+    val header = SnappyRead.read(Array[Byte](0x80.toByte, 0x80.toByte,
+      0x80.toByte, 0x20))
+    val allocated = mx.getThreadAllocatedBytes(tid) - a0
+    assert(header == null, "header-only declared length")
+    assert(allocated < (1L << 20),
+      s"header-only input allocated $allocated bytes")
   }
 
   test("SQL surface: snappy_write/snappy_read round trip") {
